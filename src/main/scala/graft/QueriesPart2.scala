@@ -194,7 +194,7 @@ private[graft] object QueriesPart2 {
       docs.repartition(32).write.mode("overwrite").parquet(s"$base/small")
       graft.io.Compact.compact(s, s"$base/small", s"$base/compact",
         targetBytes = 1L << 30)
-      s.read.parquet(s"$base/compact").select(docs.columns.map(col): _*)
+      graft.Tables.parquet(s, s"$base/compact").select(docs.columns.toIndexedSeq.map(col): _*)
     }),
     // Key-skew profile — the diagnostic before choosing a salting/AQE
     // strategy: per-key counts, then their distribution (exact quantiles

@@ -22,10 +22,7 @@ object Compact {
   def dataBytes(spark: SparkSession, dir: String): Long = {
     val path = new org.apache.hadoop.fs.Path(dir)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.listStatus(path).iterator
-      .filter(s => s.isFile && !s.getPath.getName.startsWith("_")
-        && !s.getPath.getName.startsWith("."))
-      .map(_.getLen).sum
+    graft.Tables.dataFiles(fs, path).map(_.getLen).sum
   }
 
   /** Rewrite the parquet directory at `inDir` into `outDir` with files of
@@ -35,7 +32,7 @@ object Compact {
   def compact(spark: SparkSession, inDir: String, outDir: String,
               targetBytes: Long = 128L << 20): Int = {
     val n = math.max(1L, (dataBytes(spark, inDir) + targetBytes - 1) / targetBytes).toInt
-    spark.read.parquet(inDir)
+    graft.Tables.parquet(spark, inDir)
       .repartition(n)
       .write.mode("overwrite").parquet(outDir)
     n

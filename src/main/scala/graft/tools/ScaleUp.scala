@@ -81,7 +81,7 @@ object ScaleUp {
 
     def rd(name: String): DataFrame =
       if (name == "events") graft.Tables.events(spark, src)
-      else spark.read.parquet(s"$src/$name.parquet")
+      else graft.Tables(spark, src, name)
 
     // offset stride per key space: next power of 10 above the max key,
     // so replica membership is readable off the key's leading digits
@@ -125,9 +125,9 @@ object ScaleUp {
       df.write.mode("overwrite").parquet(s"$out/$name.parquet")
 
     if (wanted("region"))
-      write(spark.read.parquet(s"$src/region.parquet"), "region")
+      write(rd("region"), "region")
     if (wanted("nation"))
-      write(spark.read.parquet(s"$src/nation.parquet"), "nation")
+      write(rd("nation"), "nation")
     if (wanted("customer")) write(expand(cust, "c_custkey" -> cS), "customer")
     if (wanted("supplier")) write(expand(supp, "s_suppkey" -> sS), "supplier")
     if (wanted("part")) write(expand(part, "p_partkey" -> pS), "part")

@@ -49,8 +49,7 @@ object TimeOrderEvents {
     spark.sparkContext.setLogLevel("WARN")
     // raw read (no ts normalization): the rewrite must keep the footer
     // encoding the streaming schema probe expects
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.read.parquet(s"$src/events.parquet")
+    graft.Tables.eventsRaw(spark, src)
       .repartitionByRange(nFiles, col("ts"))
       .sortWithinPartitions("ts")
       .write.mode("overwrite").parquet(s"$out/events.parquet")

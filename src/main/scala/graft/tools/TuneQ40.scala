@@ -15,7 +15,7 @@ object TuneQ40 {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
+    val li = graft.Tables.lineitem(spark, sfDir)
       .select(col("l_orderkey"), col("l_partkey"), col("l_quantity"))
     def time(name: String)(f: => Unit): Unit = {
       val t0 = System.nanoTime(); f

@@ -153,4 +153,14 @@ class ScaleGuardSpec extends AnyFunSuite {
     assert(!out.contains((3L, 4L)) && !out.contains((3L, 5L)) &&
       !out.contains((4L, 5L)), out)
   }
+
+  // Building a single-table query is driver work only: the table read takes
+  // its schema from one footer (Tables.parquetSchema), so no inference job
+  // runs, and none of these queries runs an eager job while it is built.
+  for (q <- Seq("q01_agg_pricing", "q05_winsorize", "q13_grouped_stats", "q19_corr_cov",
+      "q20_regression_closed", "q21_chi2", "q22_anova", "q43_clean_chain"))
+    test(s"$q: building the DataFrame launches no Spark job") {
+      val jobs = TestSpark.jobsDuring(SparkEntry.queries(q)(spark, TestSpark.sf0001))
+      assert(jobs == 0, s"$q ran $jobs job(s) while its DataFrame was built")
+    }
 }

@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.graftbridge.ListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
 /** One SparkSession for the whole test JVM (forked by sbt). */
@@ -19,4 +23,19 @@ object TestSpark {
     s
   }
   val sf0001 = "/root/testdata/sf0.001"
+
+  /** Spark jobs launched while `f` runs. The listener bus is drained before
+    * the listener is added (no earlier job leaks in) and before it is read
+    * (no job of `f` is missed). */
+  def jobsDuring(f: => Any): Int = {
+    val sc = spark.sparkContext
+    ListenerBus.drain(sc)
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try { f; ListenerBus.drain(sc); jobs.get }
+    finally sc.removeSparkListener(listener)
+  }
 }

@@ -133,22 +133,14 @@ class TreePipelineSpec extends AnyFunSuite {
   }
 
   test("knnFill(KnnExact) is lazy: building the plan triggers no Spark job") {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val base = df(mk(), mk("id_arbre" -> 2L, "X" -> 700100.0, "clc_quartier" -> null))
-        .withColumn("__ingest_id", monotonically_increasing_id())
-      val planned = TreePipeline.knnFill(base, "clc_quartier")
-      planned.queryExecution.executedPlan // force planning, not execution
-      Thread.sleep(500) // listener-bus delivery is async
-      assert(jobs.get() == 0, "knnFill construction ran a hidden Spark job")
-      // and the plan is the real one: executing it fills the null
-      assert(planned.filter(col("clc_quartier").isNull).count() == 0)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    lazy val base = df(mk(), mk("id_arbre" -> 2L, "X" -> 700100.0, "clc_quartier" -> null))
+      .withColumn("__ingest_id", monotonically_increasing_id())
+    lazy val planned = TreePipeline.knnFill(base, "clc_quartier")
+    // force planning, not execution
+    val jobs = TestSpark.jobsDuring(planned.queryExecution.executedPlan)
+    assert(jobs == 0, "knnFill construction ran a hidden Spark job")
+    // and the plan is the real one: executing it fills the null
+    assert(planned.filter(col("clc_quartier").isNull).count() == 0)
   }
 
   test("full pipeline with KnnGrid matches the KnnExact pipeline (100 TB path)") {
