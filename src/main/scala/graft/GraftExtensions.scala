@@ -100,9 +100,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
         ArgMinBy.coerced(exprs(0), exprs(1), exprs(2), max = true)
           .toAggregateExpression()))
-    // X1 as a SQL function (SURVEY.md §4): the projection is pure column
-    // math, so the "builder" assembles the same expression tree the
-    // DataFrame path uses — identical results by construction.
+    // X1 as a SQL function (SURVEY.md §4): the builder calls the same
+    // Lambert93.lonDeg / latDeg the DataFrame path uses (builtin longitude
+    // math plus the codegen'd latitude kernel) — identical results by
+    // construction.
     e.injectFunction((
       new FunctionIdentifier("lambert93_to_wgs84"),
       new ExpressionInfo("graft.functions.Lambert93", "lambert93_to_wgs84"),

@@ -787,7 +787,7 @@ private[graft] object QueriesPart1 {
     // X1 through the pure-SQL surface (SURVEY.md §4): the same
     // reprojection as q28, but written in SQL against the
     // `lambert93_to_wgs84` function GraftExtensions registers — the
-    // builder assembles the identical expression tree, so this shares
+    // builder calls the same Lambert93 column functions, so this shares
     // q28's oracle verbatim. Requires spark.sql.extensions=
     // graft.GraftExtensions (how Verify/Bench build their sessions).
     "q76_lambert93_sql" -> ((s, d) => {

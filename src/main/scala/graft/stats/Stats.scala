@@ -34,8 +34,12 @@ object Stats {
     *
     * Contingency counts via one hash aggregation; margins via windows over
     * the (tiny: |distinct a|×|distinct b| rows) count table, so the heavy
-    * input is touched exactly once. */
+    * input is touched exactly once. The level counts for `dof` are
+    * `size(collect_set(...))` in the same final aggregate — the values of
+    * `countDistinct` (nulls ignored, 0 on empty input), without the
+    * `Expand` and the extra shuffles a distinct aggregate plans. */
   def chiSquare(df: DataFrame, aCol: String, bCol: String): DataFrame = {
+    def levels(c: String): Column = size(collect_set(col(c))).cast("bigint")
     val obs = df.groupBy(col(aCol).as("r"), col(bCol).as("c"))
       .agg(count(lit(1)).cast("double").as("o"))
     val wAll = Window.partitionBy()
@@ -47,7 +51,7 @@ object Stats {
     val d = col("o") - col("exp")
     e.agg(
         sum(d * d / col("exp")).as("chi2_stat"),
-        ((countDistinct("r") - 1) * (countDistinct("c") - 1)).as("dof"))
+        ((levels("r") - 1) * (levels("c") - 1)).as("dof"))
       .withColumn("p_value",
         graft.functions.PValue.chiSquare(col("chi2_stat"), col("dof")))
   }

@@ -22,10 +22,27 @@ import java.nio.file.{Files, Paths}
   * devices (1-row scalar cross joins, O(buckets) offset windows, ≤25-row
   * dimension relations). The value is the DIFF — a new query adding a hit
   * shows up here before it ships, and each hit can be triaged once against
-  * the bounded-relation argument in its scaladoc. Run:
+  * the bounded-relation argument in its scaladoc.
+  *
+  * A second lint sizes each query's OPTIMIZED plan in expression nodes
+  * ([[expressionNodes]]) and flags every query above
+  * [[ExpressionNodeLimit]]: optimizer and planner rules walk every node, so
+  * a column helper that re-inlines a subexpression per use (an unrolled
+  * iteration) costs planning time on every run before any data moves. Run:
   * `sbt "runMain graft.tools.PlanAudit"` → PLAN_AUDIT.md.
   */
 object PlanAudit {
+
+  /** Queries whose optimized plan holds more expression nodes than this are
+    * flagged; the largest deliberate plans sit near 2,700. */
+  val ExpressionNodeLimit = 5000
+
+  /** Expression nodes of a logical plan: every node of every operator's
+    * expressions, subquery plans included. */
+  def expressionNodes(plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Int =
+    plan.collectWithSubqueries { case p =>
+      p.expressions.map(_.collect { case e => e }.size).sum
+    }.sum
 
   /** Hazard-node counts on the physical-plan TREE, not its string render
     * (r18, VERDICT r17 #7): toString re-renders each InMemoryRelation's
@@ -84,23 +101,30 @@ object PlanAudit {
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val rows = Queries.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
-      val counts =
-        try hazardCounts(fn(spark, dir).queryExecution.executedPlan)
-        catch {
-          // streaming queries and eager registry entries can't be
-          // explained statically — recorded (with the exception class, so
-          // a genuinely broken query is triageable), not silently skipped.
-          // Fatal JVM errors (OOM, LinkageError from a broken build) still
-          // propagate: a dying JVM must fail the audit, not dress up as a
-          // clean row.
-          case scala.util.control.NonFatal(e) =>
-            Seq(s"unexplainable(${e.getClass.getSimpleName})" -> 1)
-        }
-      val hits = counts.filter(_._2 > 0)
-      if (hits.isEmpty) None
-      else Some(name -> hits.map { case (l, c) => s"$l×$c" }.mkString(", "))
+    // Streaming queries and eager registry entries can't be explained
+    // statically — recorded (with the exception class, so a genuinely
+    // broken query is triageable), not silently skipped. Fatal JVM errors
+    // (OOM, LinkageError from a broken build) still propagate: a dying JVM
+    // must fail the audit, not dress up as a clean row.
+    def attempt[T](f: => T): Either[String, T] =
+      try Right(f)
+      catch {
+        case scala.util.control.NonFatal(e) =>
+          Left(s"unexplainable(${e.getClass.getSimpleName})")
+      }
+    val audited = Queries.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      val df = attempt(fn(spark, dir))
+      val nodes = df.flatMap(d => attempt(expressionNodes(d.queryExecution.optimizedPlan)))
+      val counts = df.flatMap(d => attempt(hazardCounts(d.queryExecution.executedPlan)))
+        .fold(err => Seq(err -> 1), identity)
+      (name, counts.filter(_._2 > 0), nodes)
     }
+    val rows = audited.collect { case (name, hits, _) if hits.nonEmpty =>
+      name -> hits.map { case (l, c) => s"$l×$c" }.mkString(", ")
+    }
+    val sized = audited.collect { case (name, _, Right(n)) => name -> n }.sortBy(-_._2)
+    val unsized = audited.collect { case (name, _, Left(err)) => s"$name ($err)" }
+    val flagged = sized.filter(_._2 > ExpressionNodeLimit)
     val sb = new StringBuilder
     sb.append("# PLAN_AUDIT — plan-shape lint over every registered query\n\n")
     sb.append(s"Generated by graft.tools.PlanAudit on `$dir` (explain only, " +
@@ -145,8 +169,19 @@ object PlanAudit {
         |arg_max_by_l, the (long, long)-ordered sibling that keeps the
         |exactness the double-ordered buffer could not above 2^53).
         |""".stripMargin)
+    sb.append("\n## Expression size of the optimized plan\n\n")
+    sb.append(s"Limit: $ExpressionNodeLimit expression nodes per query. " +
+      (if (flagged.isEmpty) "No query is above it.\n"
+       else s"**Above the limit:** ${flagged.map { case (n, c) => s"$n ($c)" }.mkString(", ")}.\n"))
+    if (unsized.nonEmpty)
+      sb.append(s"Not sized (no optimized plan): ${unsized.mkString(", ")}.\n")
+    sb.append("\n| Query | expression nodes |\n|---|---|\n")
+    sized.foreach { case (n, c) =>
+      sb.append(s"| $n | $c${if (c > ExpressionNodeLimit) " **over**" else ""} |\n")
+    }
     Files.writeString(Paths.get("PLAN_AUDIT.md"), sb.toString)
-    println(s"wrote PLAN_AUDIT.md (${rows.size} queries with hits)")
+    println(s"wrote PLAN_AUDIT.md (${rows.size} queries with hits, " +
+      s"${flagged.size} above $ExpressionNodeLimit expression nodes)")
     spark.stop()
   }
 }

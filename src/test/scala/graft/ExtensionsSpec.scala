@@ -88,7 +88,8 @@ class ExtensionsSpec extends AnyFunSuite {
   test("lambert93_to_wgs84 available in SQL and equals the Column API") {
     // the EPSG:2154 false origin reprojects to the projection origin
     // (3°E, 46.5°N); SQL and Column paths must agree bit-for-bit since the
-    // builder assembles the same expression tree
+    // builder calls the same Lambert93 column functions (DECIMAL literals
+    // cast to DOUBLE on the way in)
     val sql = spark.sql(
       "SELECT lambert93_to_wgs84(700000.0, 6600000.0) AS ll")
       .select("ll.lon", "ll.lat").as[(Double, Double)].first()

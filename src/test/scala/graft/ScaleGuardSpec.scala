@@ -154,6 +154,37 @@ class ScaleGuardSpec extends AnyFunSuite {
       !out.contains((4L, 5L)), out)
   }
 
+  test("q28_lambert93: the latitude is one expression, not an unrolled iteration tree") {
+    // the fixed-point latitude spelled as builtin columns re-inlines φ (and
+    // the x/y column math) twice per step: 8,966 optimized-plan expression
+    // nodes, walked by every optimizer rule before any data moves
+    val df = SparkEntry.queries("q28_lambert93")(spark, TestSpark.sf0001)
+    val nodes = graft.tools.PlanAudit.expressionNodes(df.queryExecution.optimizedPlan)
+    assert(nodes <= 50, s"q28 optimized plan has $nodes expression nodes:\n" +
+      df.queryExecution.optimizedPlan)
+  }
+
+  test("q21_chi2: degrees of freedom add no Expand and no shuffle") {
+    // countDistinct on the two category columns planned an Expand and two
+    // more shuffles after the global window; the level counts now ride the
+    // final aggregate, so only the count table's two exchanges remain
+    import org.apache.spark.sql.execution.{ExpandExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val df = SparkEntry.queries("q21_chi2")(spark, TestSpark.sf0001)
+    df.collect()
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => q +: nodes(q.plan)
+      case other => other +: other.children.flatMap(nodes)
+    }
+    val all = nodes(df.queryExecution.executedPlan)
+    val plan = df.queryExecution.executedPlan
+    assert(!all.exists(_.isInstanceOf[ExpandExec]), s"q21 plans an Expand:\n$plan")
+    val shuffles = all.count(_.isInstanceOf[ShuffleExchangeExec])
+    assert(shuffles == 2, s"expected 2 shuffle exchanges, saw $shuffles:\n$plan")
+  }
+
   // Building a single-table query is driver work only: the table read takes
   // its schema from one footer (Tables.parquetSchema), so no inference job
   // runs, and none of these queries runs an eager job while it is built.

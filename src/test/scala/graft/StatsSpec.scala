@@ -8,6 +8,11 @@ class StatsSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
+  // The 2×2 fixture's (chi2_stat, p_value) as the countDistinct-based dof
+  // computed them, pinned to the bit.
+  private val CHI2_2X2 = 0.7936507936507936
+  private val P_2X2 = 0.37299848361348664
+
   test("chiSquare matches the hand-computed statistic on a 2x2 table") {
     // table: a/x=10, a/y=20, b/x=30, b/y=40  (classic textbook example)
     val rows = Seq.fill(10)(("a", "x")) ++ Seq.fill(20)(("a", "y")) ++
@@ -18,6 +23,35 @@ class StatsSpec extends AnyFunSuite {
     // exp = 12,18,28,42; chi2 = 4/12+4/18+4/28+4/42 = 0.79365...
     assert(math.abs(r.getDouble(0) - (4.0 / 12 + 4.0 / 18 + 4.0 / 28 + 4.0 / 42)) < 1e-12)
     assert(r.getLong(1) == 1L)
+  }
+
+  test("chiSquare: dof equals (distinct rows − 1)·(distinct cols − 1), chi2 and p unchanged") {
+    def dof(df: org.apache.spark.sql.DataFrame): Long = {
+      val out = Stats.chiSquare(df, "u", "v")
+      assert(out.schema("dof").dataType == org.apache.spark.sql.types.LongType)
+      out.first().getLong(1)
+    }
+    def distinctDof(df: org.apache.spark.sql.DataFrame): Long = {
+      val r = df.agg(countDistinct("u"), countDistinct("v")).first()
+      (r.getLong(0) - 1) * (r.getLong(1) - 1)
+    }
+    // a null category is a contingency cell but not a level (countDistinct
+    // ignores nulls): 3 levels of u, 2 of v → dof 2
+    val withNull = Seq[(String, String)](("a", "x"), ("b", "y"), ("c", "x"), (null, "y"),
+      ("a", "y"), (null, "x")).toDF("u", "v")
+    assert(dof(withNull) == 2L && dof(withNull) == distinctDof(withNull))
+    // a single-level column has no freedom
+    val single = Seq(("a", "x"), ("a", "y"), ("a", "x")).toDF("u", "v")
+    assert(dof(single) == 0L && dof(single) == distinctDof(single))
+    // empty input: (0 − 1)·(0 − 1), as countDistinct gives
+    val empty = Seq.empty[(String, String)].toDF("u", "v")
+    assert(dof(empty) == 1L && dof(empty) == distinctDof(empty))
+    // the 2×2 fixture keeps the statistic and p-value it had with
+    // countDistinct
+    val rows = Seq.fill(10)(("a", "x")) ++ Seq.fill(20)(("a", "y")) ++
+      Seq.fill(30)(("b", "x")) ++ Seq.fill(40)(("b", "y"))
+    val r = Stats.chiSquare(rows.toDF("u", "v"), "u", "v").first()
+    assert(r.getDouble(0) == CHI2_2X2 && r.getLong(1) == 1L && r.getDouble(2) == P_2X2)
   }
 
   test("anova matches hand-computed F on a small fixture") {
