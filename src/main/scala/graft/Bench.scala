@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Benchmark main: runs every SparkEntry query on SPARK_GRAFT_SF_DIR and
@@ -17,38 +16,8 @@ import org.apache.spark.sql.functions._
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // ObjectHashAggregate falls back to sort-based after this many
-      // DISTINCT KEYS per task (default 128 — sized for collect_list-style
-      // unbounded buffers). This engine's OWN typed aggregates
-      // (arg_min/max_by, min_str/max_str, SpaceSaving, Bloom, MinHash)
-      // all have O(1) fixed-width buffers, so their high-cardinality
-      // groups (chunk dedup, per-user CDC, LSH pairs) can stay hashed:
-      // 1M keys ≈ tens of MB per task. The threshold is GLOBAL though,
-      // and ~a dozen queries use builtin collect_list/collect_set whose
-      // buffers grow with group size — those groupings are all bounded
-      // (per-order lines, per-user small sessions, top-k survivors), and
-      // the r14 fb128-vs-fb1M A/B on the unbounded-buffer family
-      // (q45/q58/q61/q63/q65, BASELINE.md) measured no regression at
-      // sf0.1 or sf1 — but an UNBOUNDED grouping added later must not
-      // inherit 1M silently: at 1M resident growing arrays per task this
-      // conf is an OOM risk, so new collect_* call sites need a bounded-
-      // group argument in their scaladoc. Overridable via
-      // SPARK_GRAFT_OBJ_AGG_KEYS.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_OBJ_AGG_KEYS", "1048576"))
-      .config("spark.ui.enabled", "false")
-    // audit-scoped conf overrides for focused A/Bs under the bench
-    // protocol (e.g. forcing a byte gate's fallback path) — full gate
-    // runs never set it, and a filtered run already refuses to gate
-    val spark = graft.tools.ExtraConf(builder).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Session.cpus
+    val spark = Session.local(cpus)
 
     def runNoop(name: String): Unit =
       SparkEntry.queries(name)(spark, sfDir)
@@ -97,7 +66,7 @@ object Bench {
     val canaryEvery = sys.env.getOrElse("SPARK_GRAFT_CANARY_EVERY", "25").toInt
     def canaryOnce(): Double = {
       val t0 = System.nanoTime()
-      spark.range(0L, 100000000L, 1L, cpus.toInt)
+      spark.range(0L, 100000000L, 1L, cpus)
         .select(bit_xor(xxhash64(col("id"))).as("h")) // xor: no ANSI overflow
         .write.mode("overwrite").format("noop").save()
       (System.nanoTime() - t0) / 1e9

@@ -8,9 +8,9 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
 /** SparkSessionExtensions entry point: registers the engine's custom
   * expressions as SQL functions, so
-  * `SparkSession.builder().withExtensions(new GraftExtensions)` (or
-  * `spark.sql.extensions=graft.GraftExtensions`) exposes them to pure-SQL
-  * users:
+  * `spark.sql.extensions=graft.GraftExtensions` (which [[graft.Session]]
+  * sets) or `withExtensions(new GraftExtensions)` on a session builder
+  * exposes them to pure-SQL users:
   *
   *   title_case(s)             — str_to_title-compatible casing
   *   nfc_normalize(s)          — Unicode NFC canonicalization

@@ -288,8 +288,9 @@ private[graft] object QueriesPart1 {
       Models.logisticConfusion(
         li(s, d).withColumn("is_high_disc", (col("l_discount") > 0.05).cast("double")),
         "is_high_disc", Seq("l_quantity", "l_discount", "l_tax"), Seq("l_linestatus"),
-        // Measured (TuneQ37, sf0.1): the 0.5-threshold confusion is already
-        // stable at 5 iterations (0.3σ margin); 12 is a 2.4× safety factor.
+        // Measured (maxIter sweep at sf0.1, BASELINE_HISTORY.md r21): the
+        // 0.5-threshold confusion is already stable at 5 iterations (0.3σ
+        // margin); 12 is a 2.4× safety factor.
         // Beyond that, iterations cost ~0.1 s each while the pipeline's
         // fixed cost (indexer/encoder/assembler passes + instance caching +
         // transform) dominates — so 12 captures the whole win.
@@ -297,8 +298,8 @@ private[graft] object QueriesPart1 {
         // (is_high_disc is a threshold on a feature), so the boundary the
         // 0.5 threshold sees is scale-free — more rows sharpen the same
         // separating direction rather than move it. Verified empirically at
-        // sf0.001/0.01 (Verify gate) and sf0.1 (TuneQ37); if the gate SF
-        // ever exceeds 0.1, re-run TuneQ37 at that SF before trusting 12.
+        // sf0.001/0.01 (Verify gate) and sf0.1 (the sweep); if the gate SF
+        // ever exceeds 0.1, re-run the sweep at that SF before trusting 12.
         maxIter = 12)),
     // Multimodal plumbing — binary payload → batch feature extraction
     // through the default ByteHistogramCodec (pluggable MediaCodec seam;
@@ -365,8 +366,8 @@ private[graft] object QueriesPart1 {
       //    — well inside the 2% gate; measured estimates 0.2-0.3% off at
       //    sf0.1), replacing approx_count_distinct rsd 0.005 whose
       //    per-row update into a 52 KB fixed-width register buffer
-      //    measured 5-9 s for the two sketches (TuneQ40: ds-hll2 0.2-0.4 s
-      //    — 20-40×) — and which a wider repartition made WORSE (22-28 s:
+      //    measured 5-9 s for the two sketches (BASELINE_HISTORY.md r17
+      //    round 1 §4: ds-hll2 0.2-0.4 s — 20-40×) — and which a wider repartition made WORSE (22-28 s:
       //    the register-buffer cost multiplies per task). Datasketches is
       //    already this engine's 100 TB distinct-count architecture
       //    (q187); the tolerance booleans are the query's only consumer

@@ -407,8 +407,9 @@ object Dedup {
     * deduplicating first hash-aggregated the FULL candidate stream (354M
     * (ia,ib) groups at sf10 on the vocabulary-dense harness corpus —
     * 108 GB of aggregation spill), to save re-verifying duplicate
-    * candidates; but candidate multiplicity is only ~1.67 (ProfileQ70Cards)
-    * and a merge intersect is ~100 ns, so re-verifying duplicates costs
+    * candidates; but candidate multiplicity is only ~1.67
+    * (BASELINE_HISTORY.md r15, exact-Jaccard verify family) and a merge
+    * intersect is ~100 ns, so re-verifying duplicates costs
     * far less than deduplicating the stream. True near-dup pairs are
     * sparse (256 of 3.5M distinct candidates at sf0.1), so the post-verify
     * dedup agg runs on a relation ~10⁴× smaller than the candidate stream.

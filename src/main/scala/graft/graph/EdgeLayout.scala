@@ -45,19 +45,17 @@ object EdgeLayout {
         carry.map(c => col(s"__e.$c").as(c)): _*)
   }
 
-  /** One-exchange layout + dedup. `dedup = false` skips the window (edges
-    * already distinct by construction) and sorts on `key` only.
+  /** One-exchange layout + dedup.
     *
-    * Column contract: the dedup path projects to exactly (key, other) at
+    * Column contract: the input is projected to exactly (key, other) at
     * entry — a caller-supplied extra column (say a weight) would
     * otherwise survive with a value chosen nondeterministically from the
     * duplicate run by row_number, a silent correctness trap. Callers
     * needing a value-merging dedup over extra columns must merge
     * explicitly (see [[PageRank.personalizedWeighted]]'s window-sum
-    * weight merge). The dedup = false path passes all columns through
-    * unchanged (no duplicate run exists to pick from).
+    * weight merge).
     *
-    * No explicit sort on the dedup path: the window's requirement
+    * No explicit sort: the window's requirement
     * [key, other, other] does NOT collapse against a hand-written
     * [key, other] `sortWithinPartitions`, so providing one makes
     * EnsureRequirements stack a SECOND full-edge sort on top (measured:
@@ -65,14 +63,10 @@ object EdgeLayout {
     * insert its one sort gives the same physical order, and the window
     * output's [key, other, other] ordering prefix-satisfies every
     * downstream requirement on `key`. */
-  def partitionedDistinct(edges: DataFrame, key: String, other: String,
-                          dedup: Boolean = true): DataFrame = {
-    if (!dedup) edges.repartition(col(key)).sortWithinPartitions(key)
-    else {
-      val w = Window.partitionBy(key, other).orderBy(other)
-      edges.select(col(key), col(other)).repartition(col(key))
-        .withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") === 1).drop("__rn")
-    }
+  def partitionedDistinct(edges: DataFrame, key: String, other: String): DataFrame = {
+    val w = Window.partitionBy(key, other).orderBy(other)
+    edges.select(col(key), col(other)).repartition(col(key))
+      .withColumn("__rn", row_number().over(w))
+      .filter(col("__rn") === 1).drop("__rn")
   }
 }

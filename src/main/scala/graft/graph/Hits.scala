@@ -41,8 +41,7 @@ object Hits {
 
   /** Returns (kind ∈ {hub, auth}, node, score) with score ∈ (0, 1],
     * max-normalized, rounded to 6 dp. */
-  def iterate(edges: DataFrame, iters: Int = 2, roundDp: Int = 8,
-              dedup: Boolean = true): DataFrame = {
+  def iterate(edges: DataFrame, iters: Int = 2, roundDp: Int = 8): DataFrame = {
     require(iters >= 1)
     val spark = edges.sparkSession
     // One checkpointed edge copy, pre-hashed AND pre-sorted on src (the
@@ -58,7 +57,7 @@ object Hits {
     // count-then-agg pair paid two.
     val (eSrc, nDst) = graft.io.Checkpoints.truncateLayoutPreservingAgg(
       EdgeLayout.partitionedDistinct(
-        edges.select(col("src"), col("dst")), "src", "dst", dedup))(
+        edges.select(col("src"), col("dst")), "src", "dst"))(
       _.agg(approx_count_distinct(col("dst"), 0.05)).head().getLong(0))
     // The auth→hub half-step joins on dst, the OTHER key. Two designs,
     // byte-gated like the Dedup family's broadcast gate:

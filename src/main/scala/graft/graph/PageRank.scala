@@ -30,15 +30,12 @@ import org.apache.spark.sql.functions._
 object PageRank {
 
   def iterate(edges: DataFrame, iters: Int = 2, damping: Double = 0.85,
-              roundDp: Int = 8, dedup: Boolean = true): DataFrame = {
+              roundDp: Int = 8): DataFrame = {
     // The edge list is reused by outdeg, N, and EVERY iteration's join.
     // Checkpoint it ONCE, PRE-PARTITIONED ON src: LogicalRDD preserves the
     // hash partitioning, so outdeg's groupBy(src) and every iteration's
     // src-join reuse it shuffle-free — only the (node-cardinality) rank
-    // table moves per round, never the edge table. Callers whose edge
-    // construction already guarantees distinctness pass dedup=false and
-    // skip the dedup aggregate's CPU (it costs no extra shuffle either
-    // way — see below).
+    // table moves per round, never the edge table.
     // ...AND SORTED on src within partitions: LogicalRDD preserves the
     // output ordering too, so every iteration's sort-merge join reads the
     // edge side pre-sorted and sorts only the node-cardinality rank
@@ -62,7 +59,7 @@ object PageRank {
     // count job was a full cache scan).
     val e = graft.io.Checkpoints.truncateLayoutPreservingChained(
       EdgeLayout.partitionedDistinct(
-        edges.select(col("src"), col("dst")), "src", "dst", dedup))
+        edges.select(col("src"), col("dst")), "src", "dst"))
     // outdeg is a FULL-EDGE aggregate fanned out to n, the rank seed and
     // every round's re-attach join. Unmaterialized, each of those
     // references replays the 1.2B-row (sf100) edge scan + hash agg — ~5

@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.Queries
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Regenerates PLANS.md: formatted physical plans of headline queries as
@@ -55,15 +54,10 @@ object DumpPlans {
     "q366_burrows_delta" -> "stylometry: corpus-scale work is ONE token-count agg; top-20 words and per-word mu/sigma broadcast; the source-pair join runs over the bounded 20-word z-matrix")
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      // Same extensions Verify/Bench register: the committed plan evidence
-      // must reflect the production session (RewriteMinByStruct keeps
-      // struct min_by/max_by hash-aggregable; SQL function registrations).
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // The production session (GraftExtensions included: RewriteMinByStruct
+    // keeps struct min_by/max_by hash-aggregable) at a fixed 4 cores, so
+    // the committed plan evidence does not depend on the host.
+    val spark = graft.Session.local(4)
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val sb = new StringBuilder
     sb.append("# PLANS — physical-plan evidence (generated by graft.tools.DumpPlans)\n\n")

@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.Queries
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Plan lint over the WHOLE query surface: explains every registered query
@@ -94,12 +93,8 @@ object PlanAudit {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // fixed 4 cores: the committed audit must not depend on the host
+    val spark = graft.Session.local(4)
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     // Streaming queries and eager registry entries can't be explained
     // statically — recorded (with the exception class, so a genuinely

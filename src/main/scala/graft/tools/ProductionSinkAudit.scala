@@ -105,23 +105,14 @@ object ProductionSinkAudit {
     val Array(outPath, sfDirsArg) = args.take(2)
     val sfDirs = sfDirsArg.split(",").map(_.trim).filter(_.nonEmpty)
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val sinkDir = new java.io.File(sys.props("java.io.tmpdir"),
       "graft_prod_sink_audit").getAbsolutePath
-    val spark = ExtraConf(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.streaming.streamingQueryListeners",
-        classOf[StreamingStateAudit.Listener].getName)
-      .config("spark.graft.streaming.parquetSinkDir", sinkDir)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    val spark = graft.Session.local(graft.Session.cpus,
+      "spark.sql.streaming.streamingQueryListeners" ->
+        classOf[StreamingStateAudit.Listener].getName,
+      "spark.graft.streaming.parquetSinkDir" -> sinkDir)
     sys.env.get("SPARK_GRAFT_MAX_FILES_PER_TRIGGER").foreach(v =>
       spark.conf.set("spark.graft.streaming.maxFilesPerTrigger", v))
-    spark.sparkContext.setLogLevel("WARN")
 
     val legs: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
       "q82_stream_stream_join" -> (q82Twin _),

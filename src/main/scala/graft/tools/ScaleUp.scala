@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Synthesize an sf·K dataset from a driver sf directory by K-fold
@@ -71,13 +71,7 @@ object ScaleUp {
     def wanted(name: String): Boolean = only.forall(_.contains(name))
     val Array(src, out, kStr) = args.filterNot(_.startsWith("--"))
     val k = kStr.toInt
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local(graft.Session.cpus)
 
     def rd(name: String): DataFrame =
       if (name == "events") graft.Tables.events(spark, src)

@@ -4,6 +4,7 @@ import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftbridge.ListenerBus
 
 /** Deterministic scaling audit: run named queries across several SF
   * directories and record per-query TASK METRICS — input bytes, shuffle
@@ -25,8 +26,8 @@ import org.apache.spark.sql.SparkSession
   *
   * Each query runs once UNTIMED per SF (codegen warm-up, page cache), then
   * once measured. Metrics come from a [[SparkListener]]; the listener bus
-  * is async, so after the measured action the counters are polled until
-  * stable (no growth across a 200 ms window) before snapshotting.
+  * is async, so it is drained before the counters are reset and again
+  * before they are read.
   */
 object ScalingAudit {
 
@@ -59,25 +60,10 @@ object ScalingAudit {
       Seq(inputBytes, shuffleRead, shuffleWrite, memSpill, diskSpill,
         cpuNanos, tasks, peakExecMem).foreach(_.set(0L))
 
-    /** Monotone fingerprint of everything accumulated so far — used to
-      * detect that the async listener bus has drained. */
+    /** Sum of every additive counter: 0 exactly when nothing was recorded. */
     def fingerprint: Long =
       inputBytes.get + shuffleRead.get + shuffleWrite.get + memSpill.get +
         diskSpill.get + cpuNanos.get + tasks.get
-  }
-
-  /** Poll the async listener bus until no task-end lands for 200 ms
-    * (bounded at 10 s so a stuck bus can't hang the audit). */
-  private def drain(l: MetricsListener): Unit = {
-    var last = -1L
-    var stableSince = System.nanoTime()
-    val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-    while (System.nanoTime() < deadline &&
-      (System.nanoTime() - stableSince) < 200L * 1000 * 1000) {
-      val fp = l.fingerprint
-      if (fp != last) { last = fp; stableSince = System.nanoTime() }
-      Thread.sleep(20)
-    }
   }
 
   /** Run `name` once measured on `sfDir`, returning (metrics, wallSec).
@@ -88,19 +74,19 @@ object ScalingAudit {
     measureDf(spark, l, graft.SparkEntry.queries(name)(spark, sfDir))
 
   /** Measure one noop-sunk evaluation of `df` (by-name, so construction
-    * cost lands inside the wall too). Shared with the Tune* probes. */
+    * cost lands inside the wall too). Shared with [[Profile]]. */
   private[tools] def measureDf(
       spark: SparkSession, l: MetricsListener,
       df: => org.apache.spark.sql.DataFrame): (Map[String, Long], Double) = {
     // the bus is async in BOTH directions: task-end events from the
     // warm-up (or a previous query) can still be in flight here and would
     // land AFTER reset(), contaminating the measured bytes — drain first
-    drain(l)
+    ListenerBus.drain(spark.sparkContext)
     l.reset()
     val t0 = System.nanoTime()
     df.write.mode("overwrite").format("noop").save()
     val wall = (System.nanoTime() - t0) / 1e9
-    drain(l)
+    ListenerBus.drain(spark.sparkContext)
     val m = Map(
       "input_bytes" -> l.inputBytes.get,
       "shuffle_read_bytes" -> l.shuffleRead.get,
@@ -118,20 +104,9 @@ object ScalingAudit {
     val sfDirs = sfDirsArg.split(",").map(_.trim).filter(_.nonEmpty)
     val names = namesArg.split(",").map(_.trim).filter(_.nonEmpty)
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_OBJ_AGG_KEYS", "1048576"))
-      .config("spark.ui.enabled", "false")
-    // audit-scoped knobs (see [[ExtraConf]]) — e.g. sizing a big-driver leg:
+    // audit-scoped knobs (see [[graft.Session]]) — e.g. sizing a big-driver leg:
     //   SPARK_GRAFT_EXTRA_CONF="spark.graft.dedup.broadcastMaxBytes=4294967296,spark.driver.maxResultSize=8g"
-    val spark = ExtraConf(builder).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local(graft.Session.cpus)
     val listener = new MetricsListener
     spark.sparkContext.addSparkListener(listener)
 

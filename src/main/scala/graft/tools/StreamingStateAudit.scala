@@ -3,7 +3,6 @@ package graft.tools
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
 /** Streaming STATE-STORE scaling audit — the stateful companion to
@@ -106,7 +105,7 @@ object StreamingStateAudit {
     * lands for 200 ms (bounded at 10 s): a fixed sleep misses stragglers
     * under GC pressure — late events would vanish from this query's
     * snapshot AND land after the next reset(), contaminating the next
-    * row. Same stability-drain device as ScalingAudit.drain. */
+    * row. */
   private[tools] def drainBus(): Unit = drain()
 
   private def drain(): Unit = {
@@ -130,28 +129,18 @@ object StreamingStateAudit {
     val sfDirs = sfDirsArg.split(",").map(_.trim).filter(_.nonEmpty)
     val names = namesArg.split(",").map(_.trim).filter(_.nonEmpty)
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // ExtraConf: audit-scoped knobs at session creation — a big-SF leg
-    // needs spark.driver.maxResultSize raised because the engine's
+    // SPARK_GRAFT_EXTRA_CONF: audit-scoped knobs at session creation — a
+    // big-SF leg needs spark.driver.maxResultSize raised because the engine's
     // streaming queries RETURN their result via a memory sink (the
     // harness contract), which collects the joined output on the driver;
     // operator STATE (what this tool measures) is unaffected either way.
-    val spark = ExtraConf(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
+    val spark = graft.Session.local(graft.Session.cpus,
       // the load-bearing line: cloned sessions instantiate this listener
-      .config("spark.sql.streaming.streamingQueryListeners",
-        classOf[Listener].getName)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+      "spark.sql.streaming.streamingQueryListeners" -> classOf[Listener].getName)
     // optional bounded-state backfill replay (see EventsStream's
     // eventsStreamSource): chunk the file source N files per micro-batch
     sys.env.get("SPARK_GRAFT_MAX_FILES_PER_TRIGGER").foreach(v =>
       spark.conf.set("spark.graft.streaming.maxFilesPerTrigger", v))
-    spark.sparkContext.setLogLevel("WARN")
 
     val perSf = sfDirs.map { sfDir =>
       val rows = names.map { name =>

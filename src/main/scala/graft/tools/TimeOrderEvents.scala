@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Rewrite an SF dir's events table as a TIME-ORDERED multi-file parquet
@@ -40,13 +39,7 @@ object TimeOrderEvents {
   def main(args: Array[String]): Unit = {
     val Array(src, out, nFilesStr) = args.take(3)
     val nFiles = nFilesStr.toInt
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local(graft.Session.cpus)
     // raw read (no ts normalization): the rewrite must keep the footer
     // encoding the streaming schema probe expects
     graft.Tables.eventsRaw(spark, src)

@@ -2,26 +2,21 @@ package graft
 
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.graftbridge.ListenerBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftbridge.ListenerBus
 
 /** One SparkSession for the whole test JVM (forked by sbt). */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.warehouse.dir", "/tmp/graft-test-warehouse")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  /** The production conf at 4 cores, except that ObjectHashAggregate keeps
+    * Spark's default fallback of 128 keys, so the suite still exercises the
+    * sort-based fallback path. */
+  val conf: Seq[(String, String)] = Seq(
+    "spark.app.name" -> "graft-tests",
+    "spark.sql.warehouse.dir" -> "/tmp/graft-test-warehouse",
+    "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> "128")
+
+  lazy val spark: SparkSession = Session.local(4, conf: _*)
   val sf0001 = "/root/testdata/sf0.001"
 
   /** Spark jobs launched while `f` runs. The listener bus is drained before

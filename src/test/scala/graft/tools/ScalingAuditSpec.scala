@@ -4,9 +4,9 @@ import graft.TestSpark
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The scaling-audit listener must actually see task metrics: input bytes
-  * for a parquet scan, at least one task, and a drained (stable) counter
-  * set after the bus-poll — otherwise the BASELINE.md byte tables would
-  * silently record zeros and read as "no shuffle" for everything. */
+  * for a parquet scan, at least one task, and the full counter set once
+  * the listener bus is drained — otherwise the BASELINE.md byte tables
+  * would silently record zeros and read as "no shuffle" for everything. */
 class ScalingAuditSpec extends AnyFunSuite {
 
   test("measureOnce records input bytes, tasks and cpu for a scan-agg query") {

@@ -11,6 +11,28 @@
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
+# One session builder: every session goes through graft.Session, so the
+# engine conf cannot drift apart between mains, tools and tests.
+builders=$(grep -rn "SparkSession.builder" src | grep -v "^src/main/scala/graft/Session.scala:" || true)
+if [[ -n "$builders" ]]; then
+  echo "precommit: SparkSession.builder outside graft/Session.scala:" >&2
+  echo "$builders" >&2
+  exit 1
+fi
+
+# Every `runMain graft.…` the docs name must be an object in src/main.
+missing=0
+for fq in $(grep -oh "runMain graft\.[A-Za-z0-9_.]*" README.md .claude/skills/verify/SKILL.md \
+    | sed "s/^runMain //" | sort -u); do
+  pkg=${fq%.*} obj=${fq##*.}
+  files=$(grep -rlx "package $pkg" src/main/scala || true)
+  if [[ -z "$files" ]] || ! grep -q "^object $obj\b" $files; then
+    echo "precommit: docs name runMain $fq, but src/main has no such object" >&2
+    missing=1
+  fi
+done
+[[ $missing == 0 ]] || exit 1
+
 sbt -batch compile Test/compile
 
 if [[ "${1:-}" == "--test" ]]; then
