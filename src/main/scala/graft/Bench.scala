@@ -23,25 +23,6 @@ object Bench {
       SparkEntry.queries(name)(spark, sfDir)
         .write.mode("overwrite").format("noop").save()
 
-    // r18 measurement fix (VERDICT r17 #1): queries that persist() layout
-    // checkpoints (Checkpoints.truncateLayoutPreserving, local-mode branch
-    // — the iterative graph family) leave their InMemoryRelations in the
-    // CacheManager after the query returns, and CacheManager plan-matches
-    // LATER invocations of the same canonicalized plan onto them — so the
-    // warm-up pass used to pre-build the graph family's caches and the
-    // timed passes measured iteration cost only (and within a pass,
-    // queries sharing a construction subtree could ride each other's
-    // caches). Dropping all SQL caches and any leaked persisted RDDs
-    // (localCheckpoint blocks) BEFORE each timed query makes every timed
-    // row a cold, compute-from-parquet measurement. The drop runs OUTSIDE
-    // the timed region: it is bookkeeping for the PREVIOUS query, not part
-    // of this one. Contract-safe: additions only, same queries, same JSON.
-    def dropCachedState(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.valuesIterator
-        .foreach(_.unpersist(blocking = false))
-    }
-
     // Optional focus list for local iteration (comma-separated prefixes);
     // unset → all queries, which is what the driver runs.
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
@@ -82,7 +63,9 @@ object Bench {
     def pass(p: Int): Seq[(String, Double)] =
       selected.toSeq.sortBy(_._1).zipWithIndex.map { case ((name, _), i) =>
         if (i % canaryEvery == 0) canaries += (s"p$p:$name" -> canaryOnce())
-        dropCachedState() // every timed query starts cache-cold (r18)
+        // every timed query starts cache-cold (r18); the drop is
+        // bookkeeping for the PREVIOUS query, so it runs outside the timer
+        Session.dropCachedState(spark)
         val t0 = System.nanoTime()
         val ok = try { runNoop(name); true } catch { case _: Throwable => false }
         name -> (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)

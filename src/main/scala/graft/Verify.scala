@@ -14,6 +14,8 @@ object Verify {
       only.forall(_.exists(name.startsWith))
     }
     selected.foreach { case (name, fn) =>
+      // each query runs as it would alone, not on an earlier one's caches
+      Session.dropCachedState(spark)
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

@@ -452,9 +452,11 @@ object Models {
       def nodeExpr: org.apache.spark.sql.Column =
         splits.toSeq.sortBy(_._1).foldLeft(lit(1): org.apache.spark.sql.Column) {
           case (acc, (node, (f, t))) =>
-            when(acc === node,
-              when(col(numericCols(f)).cast("double") <= t, node * 2)
-                .otherwise(node * 2 + 1)).otherwise(acc)
+            val split = when(col(numericCols(f)).cast("double") <= t, node * 2)
+              .otherwise(node * 2 + 1)
+            // every row starts at the root (node 1, first in order): its
+            // split needs no `1 = 1` guard
+            if (node == 1) split else when(acc === node, split).otherwise(acc)
         }
       def gini(counts: Iterable[Long]): Double = {
         val tot = counts.sum.toDouble

@@ -59,7 +59,7 @@ object EventsStream {
     * writes to the `noop` streaming sink and an EMPTY frame with the
     * output schema is returned: every source read, shuffle, and state
     * transition still executes identically — only the driver-side result
-    * collection is elided, which is what lets StreamingStateAudit measure
+    * collection is elided, which is what lets ScalingAudit measure
     * state at SFs whose full output no single JVM should hold. A real
     * deployment writes to a real sink (files/Kafka) and sees neither. */
   private def runAvailableNow(s: SparkSession, qname: String,

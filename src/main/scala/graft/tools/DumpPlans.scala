@@ -5,8 +5,22 @@ import java.nio.file.{Files, Paths}
 
 /** Regenerates PLANS.md: formatted physical plans of headline queries as
   * committed evidence of scan pruning / pushdown / join strategy / partial
-  * aggregation. Run: `sbt "runMain graft.tools.DumpPlans"`. */
+  * aggregation. Run: `sbt "runMain graft.tools.DumpPlans"`; two runs of
+  * one commit write byte-identical files (see [[normalize]]). */
 object DumpPlans {
+  private val PlanId = "\\[plan_id=(\\d+)\\]".r
+
+  /** Spark numbers plan nodes from one JVM-wide counter that async work
+    * (AQE stages, broadcasts) also draws from, so a plan's `[plan_id=N]`
+    * values vary from run to run: renumber them 1, 2, … in order of first
+    * appearance within the plan. The application id (q80's partitioned
+    * temp directory is named after it) becomes `<app-id>`. */
+  private def normalize(plan: String, appId: String): String = {
+    val ids = scala.collection.mutable.Map[String, Int]()
+    PlanId.replaceAllIn(plan.replace(appId, "<app-id>"),
+      m => s"[plan_id=${ids.getOrElseUpdate(m.group(1), ids.size + 1)}]")
+  }
+
   val headline: Seq[(String, String)] = Seq(
     "q01_agg_pricing" -> "partial+final hash agg; 5-of-11 column pruned scan",
     "q04_filter_isin" -> "In/range predicates pushed into the parquet scan",
@@ -59,21 +73,22 @@ object DumpPlans {
     // the committed plan evidence does not depend on the host.
     val spark = graft.Session.local(4)
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
+    def explain(df: org.apache.spark.sql.DataFrame): String = normalize(
+      df.queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode),
+      spark.sparkContext.applicationId)
     val sb = new StringBuilder
     sb.append("# PLANS — physical-plan evidence (generated by graft.tools.DumpPlans)\n\n")
     sb.append(s"Dataset: `$dir`. Regenerate after plan-affecting changes.\n")
     headline.foreach { case (name, note) =>
-      val plan = Queries.queries(name)(spark, dir)
-        .queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
+      val plan = explain(Queries.queries(name)(spark, dir))
       sb.append(s"\n## $name — $note\n\n```\n$plan```\n")
     }
     // q70's registry entry runs its fixpoint eagerly (checkpointed RDD scans
     // would be all the explain showed), so dump its candidate+verify stage —
     // the scale-critical plan — directly.
-    val selfPairs = graft.dedup.Dedup.ngramJaccardSelfPairs(
+    val selfPairs = explain(graft.dedup.Dedup.ngramJaccardSelfPairs(
       graft.Tables.documents(spark, dir), "text", "doc_id", k = 2, threshold = 0.5,
-      materializeShared = false) // declarative form so the full tree is visible
-      .queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
+      materializeShared = false)) // declarative form so the full tree is visible
     sb.append("\n## q70 pairs stage (ngramJaccardSelfPairs) — PPJoin prefix filter: " +
       "doc-freq agg + window rank on doc id, prefix-postings equi-join with " +
       "length+positional filters, merge-scan verify, distinct only on the " +
@@ -83,10 +98,9 @@ object DumpPlans {
     // q78's registry entry materializes the shared postings subtree (the
     // self-join sides don't canonicalize to one exchange) — dump the
     // declarative form so the full winnow tree is visible.
-    val winnow = graft.dedup.Dedup.winnowNearDupPairs(
+    val winnow = explain(graft.dedup.Dedup.winnowNearDupPairs(
       graft.Tables.documents(spark, dir), "text", "doc_id",
-      k = 3, w = 4, minShared = 8, maxDocFreq = 64, materializeShared = false)
-      .queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
+      k = 3, w = 4, minShared = 8, maxDocFreq = 64, materializeShared = false))
     sb.append("\n## q78 (winnowNearDupPairs) — winnowing near-dup: one-pass " +
       "fingerprint expression, inverted-postings self equi-join (no cross " +
       "join), window df-cap skew guard (production default materializes the " +

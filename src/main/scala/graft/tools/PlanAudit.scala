@@ -108,6 +108,8 @@ object PlanAudit {
           Left(s"unexplainable(${e.getClass.getSimpleName})")
       }
     val audited = Queries.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      // each plan as the query would plan alone, not over an earlier one's caches
+      graft.Session.dropCachedState(spark)
       val df = attempt(fn(spark, dir))
       val nodes = df.flatMap(d => attempt(expressionNodes(d.queryExecution.optimizedPlan)))
       val counts = df.flatMap(d => attempt(hazardCounts(d.queryExecution.executedPlan)))

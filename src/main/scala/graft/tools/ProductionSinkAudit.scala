@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.metrics.QueryMetrics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -13,9 +14,9 @@ import org.apache.spark.sql.functions._
   * sessionization) through the `spark.graft.streaming.parquetSinkDir`
   * seam — foreachBatch + idempotent per-batch-overwrite parquet, the q126
   * exactly-once recipe — at big SF, recording per-query:
-  *   - StateOperatorProgress peaks (same [[StreamingStateAudit.Sink]]
-  *     listener the noop legs use, so the columns are directly
-  *     comparable), and
+  *   - StateOperatorProgress peaks (the same [[graft.metrics.QueryMetrics]]
+  *     state columns [[ScalingAudit]] records for the noop legs, so the
+  *     columns are directly comparable), and
   *   - output equivalence vs an in-Spark BATCH twin of the same
   *     semantics: row count and an order-insensitive content hash
   *     (sum of xxhash64 over canonical-JSON rows), both computed
@@ -29,11 +30,12 @@ import org.apache.spark.sql.functions._
   *
   * Usage:
   *   runMain graft.tools.ProductionSinkAudit <out.json> <sfDir1,...>
-  * Optional env: SPARK_GRAFT_MAX_FILES_PER_TRIGGER=<n> runs the same legs
-  * as a CHUNKED backfill (watermark advances between micro-batches, state
-  * evicts incrementally); output equivalence must and does survive the
-  * chunking — inner-join emission and session timeout firing are
-  * watermark-gated but their FINAL emitted set is chunk-invariant. */
+  * `SPARK_GRAFT_EXTRA_CONF=spark.graft.streaming.maxFilesPerTrigger=<n>`
+  * runs the same legs as a CHUNKED backfill (watermark advances between
+  * micro-batches, state evicts incrementally); output equivalence must and
+  * does survive the chunking — inner-join emission and session timeout
+  * firing are watermark-gated but their FINAL emitted set is
+  * chunk-invariant. */
 object ProductionSinkAudit {
 
   /** Order-insensitive content hash + row count, fully distributed.
@@ -103,61 +105,41 @@ object ProductionSinkAudit {
 
   def main(args: Array[String]): Unit = {
     val Array(outPath, sfDirsArg) = args.take(2)
-    val sfDirs = sfDirsArg.split(",").map(_.trim).filter(_.nonEmpty)
+    val sfDirs = sfDirsArg.split(",").map(_.trim).filter(_.nonEmpty).toSeq
 
     val sinkDir = new java.io.File(sys.props("java.io.tmpdir"),
       "graft_prod_sink_audit").getAbsolutePath
     val spark = graft.Session.local(graft.Session.cpus,
-      "spark.sql.streaming.streamingQueryListeners" ->
-        classOf[StreamingStateAudit.Listener].getName,
       "spark.graft.streaming.parquetSinkDir" -> sinkDir)
-    sys.env.get("SPARK_GRAFT_MAX_FILES_PER_TRIGGER").foreach(v =>
-      spark.conf.set("spark.graft.streaming.maxFilesPerTrigger", v))
 
-    val legs: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
-      "q82_stream_stream_join" -> (q82Twin _),
-      "q67_sessionize_stateful" -> (q67Twin _))
+    val twins = Seq[(String, (SparkSession, String) => DataFrame)](
+      "q82_stream_stream_join" -> q82Twin, "q67_sessionize_stateful" -> q67Twin)
 
-    val perSf = sfDirs.map { sfDir =>
-      val rows = legs.map { case (name, twin) =>
-        StreamingStateAudit.drainBus()
-        StreamingStateAudit.Sink.reset()
-        val t0 = System.nanoTime()
-        val sinkResult = graft.SparkEntry.queries(name)(spark, sfDir)
-        // the query already ran (parquet sink) — count/hash read the files
-        val (sCnt, sHash) = countHash(sinkResult)
-        val wall = (System.nanoTime() - t0) / 1e9
-        StreamingStateAudit.drainBus()
-        val (ops, srows, smem, supd, srem) = StreamingStateAudit.Sink.snapshot()
-        val (bCnt, bHash) = countHash(twin(spark, sfDir))
-        val valueDelta =
-          if (name.startsWith("q67")) {
-            val a = sinkResult.select(col("user_id"), col("session_seq"),
-              col("session_value").as("sv_a"))
-            val b = twin(spark, sfDir).select(col("user_id"),
-              col("session_seq"), col("session_value").as("sv_b"))
-            val r = a.join(b, Seq("user_id", "session_seq"), "full")
-              .agg(max(abs(coalesce(col("sv_a"), lit(Double.MaxValue)) -
-                coalesce(col("sv_b"), lit(Double.MaxValue))))).head()
-            if (r.isNullAt(0)) 0.0 else r.getDouble(0)
-          } else 0.0
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-        System.gc()
-        val j = s"""{"state_operators":$ops,"state_rows_peak":$srows,""" +
-          s""""state_mem_peak_bytes":$smem,"state_rows_updated":$supd,""" +
-          s""""state_rows_removed":$srem,"sink_rows":$sCnt,""" +
-          s""""batch_twin_rows":$bCnt,"rows_match":${sCnt == bCnt},""" +
-          s""""hash_match":${sHash == bHash},""" +
-          f""""q67_value_delta_max":$valueDelta%.6f,""" +
-          f""""wall_sec":$wall%.4f}"""
-        println(s"[prod-sink-audit] $sfDir $name $j")
-        s""""$name":$j"""
-      }
-      s""""$sfDir":${rows.mkString("{", ",", "}")}"""
+    ScalingAudit.writeLegs("prod-sink-audit", outPath, sfDirs, twins.map(_._1)) { (sfDir, name) =>
+      val twin = twins.toMap.apply(name)
+      // lazy: building the query runs the stream, so both are forced
+      // inside the measured body; count/hash then read the sink files
+      lazy val sinkResult = graft.SparkEntry.queries(name)(spark, sfDir)
+      lazy val sinkCountHash = countHash(sinkResult)
+      val m = QueryMetrics.measure(spark)(sinkCountHash)
+      val (sCnt, sHash) = sinkCountHash
+      val (bCnt, bHash) = countHash(twin(spark, sfDir))
+      val valueDelta =
+        if (name.startsWith("q67")) {
+          val a = sinkResult.select(col("user_id"), col("session_seq"),
+            col("session_value").as("sv_a"))
+          val b = twin(spark, sfDir).select(col("user_id"),
+            col("session_seq"), col("session_value").as("sv_b"))
+          val r = a.join(b, Seq("user_id", "session_seq"), "full")
+            .agg(max(abs(coalesce(col("sv_a"), lit(Double.MaxValue)) -
+              coalesce(col("sv_b"), lit(Double.MaxValue))))).head()
+          if (r.isNullAt(0)) 0.0 else r.getDouble(0)
+        } else 0.0
+      ScalingAudit.release(spark)
+      ScalingAudit.row(m, "sink_rows" -> sCnt, "batch_twin_rows" -> bCnt,
+        "rows_match" -> (sCnt == bCnt), "hash_match" -> (sHash == bHash),
+        "q67_value_delta_max" -> f"$valueDelta%.6f")
     }
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(outPath),
-      perSf.mkString("{", ",", "}"))
-    println(s"[prod-sink-audit] wrote $outPath")
     spark.stop()
   }
 }

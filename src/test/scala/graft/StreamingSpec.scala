@@ -29,7 +29,7 @@ class StreamingSpec extends AnyFunSuite {
     spark.conf.set("spark.graft.streaming.auditNoopSink", "true")
     try {
       val viaNoop = EventsStream.windowedCounts(spark, TestSpark.sf0001)
-      // the contract StreamingStateAudit relies on: same plan shape (the
+      // the contract ScalingAudit's state columns rely on: same plan shape (the
       // downstream projection resolved, so the stream really ran through
       // planning + execution), zero driver-collected rows
       assert(viaNoop.schema == viaMemory.schema)

@@ -20,6 +20,17 @@ if [[ -n "$builders" ]]; then
   exit 1
 fi
 
+# One metrics listener: every listener and bus drain goes through
+# graft.metrics.QueryMetrics and graftbridge.ListenerBus, so tools and tests
+# measure the same way.
+listeners=$(grep -rnE "(extends|with|new)[[:space:]]+([A-Za-z0-9_]+\.)*(SparkListener|StreamingQueryListener)\b|StreamingQueryListener \{|streamingQueryListeners|waitUntilEmpty" src \
+  | grep -vE "^src/main/scala/(graft/metrics/QueryMetrics|org/apache/spark/sql/graftbridge/ListenerBus)\.scala:" || true)
+if [[ -n "$listeners" ]]; then
+  echo "precommit: listener or bus drain outside graft/metrics/QueryMetrics.scala and graftbridge/ListenerBus.scala:" >&2
+  echo "$listeners" >&2
+  exit 1
+fi
+
 # Every `runMain graft.…` the docs name must be an object in src/main.
 missing=0
 for fq in $(grep -oh "runMain graft\.[A-Za-z0-9_.]*" README.md .claude/skills/verify/SKILL.md \
