@@ -20,6 +20,8 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
   *   minhash_sig_p61(tokens, k, n) — oracle-replayable md5/mod-p MinHash
   *   winnow_fingerprint_p61(tokens, k, w) — winnowing (MOSS) fingerprints
   *   arg_min_by(p, d, t)       — hash-aggregable argmin aggregate
+  *   arg_max_by(p, d, t)         (and argmax); a BIGINT or other integral
+  *                               `d` orders exactly, also above 2^53
   *   lambert93_to_wgs84(x, y)  — struct(lon, lat) inverse reprojection
   *                               (SURVEY.md §4 X1-as-FunctionBuilder)
   *   dot_d(a, b)               — tight-loop double-array dot product

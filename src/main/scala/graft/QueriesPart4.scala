@@ -897,11 +897,11 @@ private[graft] object QueriesPart4 {
     // dedup, scaled to fixed 16-token chunks since the corpus has no
     // newlines): chunks are cut per-row with transform+slice (no
     // explode-join), the keep-first winner per distinct chunk is ONE
-    // hash agg — the typed arg_min_by_l over the (doc_id, idx) tuple
+    // hash agg — the typed arg_min_by over the (doc_id, idx) tuple
     // order (builtin min(struct) buffers an immutable struct and sinks
     // the corpus agg into SortAggregate; PLAN_AUDIT caught it), exact
     // at ANY chunk count AND any doc_id (both fields integral, so the
-    // (long,long) buffer has no 2^53 double-precision cliff; a packed
+    // exact long key has no 2^53 double-precision cliff; a packed
     // doc_id·K + idx key would silently corrupt the total order past K
     // chunks/doc), no corpus window — and the survivor ratio is a
     // second bounded agg.
@@ -910,7 +910,7 @@ private[graft] object QueriesPart4 {
     "q220_chunk_dedup" -> ((s, d) => {
       val chunks = chunks16(doc(s, d))
       val kept = chunks.groupBy("chunk")
-        .agg(graft.functions.ArgMinByLong(struct(col("doc_id"), col("idx")),
+        .agg(graft.functions.ArgMinBy(struct(col("doc_id"), col("idx")),
           col("doc_id"), col("idx")).as("keeper"))
       chunks.join(kept, Seq("chunk"))
         .groupBy("doc_id").agg(

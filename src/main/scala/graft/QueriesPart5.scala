@@ -82,11 +82,8 @@ private[graft] object QueriesPart5 {
       // the pair stream map-side, and selects the IDENTICAL set under
       // the same (cos DESC, nid ASC) total order (TopKByScoreSpec pins
       // the window parity).
-      val top = pairs.groupBy("qid", "qlabel")
-        .agg(graft.functions.TopKByScore(
-          col("nlabel"), col("cos"), col("nid"), 10).as("__top"))
-      val votes = top
-        .select(col("qid"), col("qlabel"), explode(col("__top")).as("nlabel"))
+      val votes = Rankings.topKByScore(pairs, Seq("qid", "qlabel"),
+          col("cos"), col("nid"), 10, Seq("nlabel"))
         .groupBy("qid", "qlabel", "nlabel").agg(count(lit(1)).as("c"))
       votes.withColumn("vr", row_number().over(
           Window.partitionBy("qid").orderBy(col("c").desc, col("nlabel").asc)))

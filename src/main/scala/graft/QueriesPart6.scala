@@ -437,7 +437,7 @@ private[graft] object QueriesPart6 {
       // (the shared chunks16 cut — one definition for both queries)
       val chunks = chunks16(exact)
       val kept = chunks.groupBy("chunk")
-        .agg(graft.functions.ArgMinByLong(struct(col("doc_id"), col("idx")),
+        .agg(graft.functions.ArgMinBy(struct(col("doc_id"), col("idx")),
           col("doc_id"), col("idx")).as("keeper"))
       val surviving = chunks.join(kept, "chunk")
         .filter(struct(col("doc_id"), col("idx")) === col("keeper"))

@@ -556,8 +556,7 @@ private[graft] object QueriesPart8 {
     // would degrade the whole corpus agg to sort-sort-SortAggregate.
     // arg_*_by skips null-ordering rows — vacuous here, tsu/event_id
     // are never null. Prices are exact cents; VWAP divides two exact
-    // integer sums. Epoch-micros fit a double exactly until year ~2255
-    // (2^53 µs), so the DoubleType ordering buffer is lossless.
+    // integer sums. The long epoch-micro key orders as an exact long.
     "q352_vwap_bars" -> ((s, d) => {
       val b = ev(s, d).select(
         // floor division via pmod (not bare DIV, which truncates toward
@@ -825,7 +824,7 @@ private[graft] object QueriesPart8 {
     // WHICH row attains it. The deviation rides the n-scaled integer
     // |c·n − S| (exact, no float mean subtraction per row), and the
     // argmax tie-breaks deterministically to the LOWEST event_id via
-    // the typed arg_max_by_l over the exact (dev, −id) LONG order —
+    // the typed arg_max_by over the exact (dev, −id) LONG order —
     // one hash aggregate, no window, no double rounding at any scale.
     // Per-type stats broadcast back.
     "q359_grubbs" -> ((s, d) => {
@@ -839,14 +838,14 @@ private[graft] object QueriesPart8 {
         .join(broadcast(st), Seq("event_type"))
         .select(col("event_type"), col("event_id"), col("n"), col("sc"),
           col("qc"), abs(col("c") * col("n") - col("sc")).as("dev"))
-      // typed arg_max_by_l: EXACT (long, long) ordering — ArgMinBy's
-      // double buffer would round dev above 2^53 at extreme row counts,
+      // typed arg_max_by: the integral dev orders as an EXACT long (a
+      // double key would round dev above 2^53 at extreme row counts),
       // and builtin max_by(struct) SortAggregates the corpus (the last
       // such site PLAN_AUDIT had left triaged as a trade; now closed)
       j.groupBy("event_type").agg(max(col("n")).as("n"),
           max(col("sc")).as("sc"), max(col("qc")).as("qc"),
           max(col("dev")).as("md"),
-          graft.functions.ArgMinByLong.argMax(col("event_id"),
+          graft.functions.ArgMinBy.argMax(col("event_id"),
             col("dev"), col("event_id") * -1).as("outlier_event_id"))
         .select(col("event_type"), col("n"),
           round((col("md").cast("double") / col("n").cast("double"))

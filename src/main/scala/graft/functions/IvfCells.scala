@@ -9,28 +9,27 @@ import org.apache.spark.sql.types._
 
 /** IVF coarse-quantizer kernels for [[graft.similarity.Similarity.ivfCosineTopK]].
   *
-  * The round-6 IVF implementation inlined the centroid table as `nCells`
-  * literal struct expressions (`array(struct(lit(...)), ...)`), which is an
-  * O(nCells·dim) expression TREE: at the nCells ≈ 10³–10⁴ a 100 TB corpus
-  * needs, Janino bails out of codegen on the generated blob and the probe
-  * side pays an O(nCells log nCells) in-row `array_sort`. These expressions
-  * fix the scale ceiling: the centroid matrix rides along as plain
-  * constructor data — ONE reference object in the evaluated plan, O(1) plan
-  * size regardless of nCells — and each row does one tight JVM loop over
-  * it. Assignment stays a pure per-row map (zero shuffle over the corpus),
-  * which is why this beats the obvious alternative of a broadcast-joined
-  * centroid table + arg-min aggregation: that shape explodes the corpus
-  * ×nCells and then re-aggregates it — a full corpus shuffle that the
-  * map-only form never pays.
+  * The centroid matrix rides along as plain constructor data — ONE
+  * reference object in the evaluated plan, O(1) plan size regardless of
+  * nCells — and each row does one tight JVM loop over it. Centroids spelled
+  * as `nCells` literal struct expressions instead form an O(nCells·dim)
+  * expression TREE: at the nCells ≈ 10³–10⁴ a 100 TB corpus needs, Janino
+  * bails out of codegen on the generated blob, and ranking probes needs an
+  * O(nCells log nCells) in-row `array_sort`. Assignment stays a pure
+  * per-row map (zero shuffle over the corpus), which is why this beats the
+  * obvious alternative of a broadcast-joined centroid table + arg-min
+  * aggregation: that shape explodes the corpus ×nCells and then
+  * re-aggregates it — a full corpus shuffle that the map-only form never
+  * pays.
   *
   * Numeric contract (oracle parity): cosines are the same sequential
-  * left-fold dot product as [[DotProductD]] divided by (rowNorm · centNorm)
-  * — bit-identical to the literal-inlined form. Preconditions (enforced by
-  * the caller filtering zero norms, documented in Similarity): embeddings
-  * are non-null, uniform-dimension, nonzero-norm, so no NaN cosines arise
-  * and JVM `>` comparison agrees with Spark's NaN-is-largest ordering.
-  * Ties break to the LOWEST centroid id on both paths (centroids iterate in
-  * ascending-id order; replacement requires strictly greater cosine).
+  * left-fold dot product as [[DotProductD]] divided by (rowNorm · centNorm).
+  * Preconditions (enforced by the caller filtering zero norms, documented
+  * in Similarity): embeddings are non-null, uniform-dimension, nonzero-norm,
+  * so no NaN cosines arise and JVM `>` comparison agrees with Spark's
+  * NaN-is-largest ordering. Ties break to the LOWEST centroid id
+  * (centroids iterate in ascending-id order; replacement requires strictly
+  * greater cosine).
   */
 private[graft] object IvfKernel {
   /** Sequential-fold dot of a row vector against centroid j; NaN-free under
@@ -85,6 +84,11 @@ case class NearestCentroidCell(left: Expression, right: Expression,
     }
     bestId
   }
+
+  // the centroid arrays would print as JVM identity hashes, which differ
+  // between runs; plans show the table's size instead
+  override protected def stringArgs: Iterator[Any] =
+    Iterator(left, right, s"${centIds.length} cells")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): NearestCentroidCell =
@@ -146,6 +150,9 @@ case class TopProbeCells(left: Expression, right: Expression,
     }
     new GenericArrayData(out.map(java.lang.Long.valueOf(_)))
   }
+
+  override protected def stringArgs: Iterator[Any] =
+    Iterator(left, right, s"${centIds.length} cells", nProbe)
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): TopProbeCells =

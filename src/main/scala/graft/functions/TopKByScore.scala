@@ -8,11 +8,12 @@ import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
 
-/** Mutable top-k state: parallel arrays of (score, tiebreak, payload),
-  * `n ≤ k` entries, unordered except that `worst` indexes the rank-worst
-  * entry once the buffer is full. */
+/** Mutable top-k state: parallel arrays of (score key, tiebreak,
+  * payload), `n ≤ k` entries, unordered except that `worst` indexes the
+  * rank-worst entry once the buffer is full. The score is held as its
+  * [[OrderKey]], so every comparison is two long compares. */
 final class TopKBuffer(k: Int) {
-  val d = new Array[Double](k)
+  val d = new Array[Long](k)
   val t = new Array[Long](k)
   val p = new Array[Any](k)
   var n: Int = 0
@@ -23,10 +24,12 @@ final class TopKBuffer(k: Int) {
   * k rank-best rows under the total order (ord_double DESC, ord_tiebreak
   * ASC), returned as an array in rank order. Exactly the rows
   * `row_number() OVER (ORDER BY ord_double DESC, ord_tiebreak ASC) <= k`
-  * selects (same double total order Spark sorts by: NaN greatest —
-  * so NaN scores rank FIRST here, as they do under a descending sort —
-  * and -0.0 < 0.0; the tiebreak must be unique within the group for the
-  * selected SET to be deterministic).
+  * selects, under the same double order Spark sorts by
+  * ([[OrderKey.ofDouble]]): -0.0 equals 0.0, so signed zeros fall
+  * through to the tiebreak; NaN is greatest, so NaN scores rank FIRST as
+  * under a descending sort; a null score ranks LAST, as DESC NULLS LAST
+  * puts it. Rows with a null tiebreak are skipped; the tiebreak must be
+  * unique within the group for the selected SET to be deterministic.
   *
   * Why not the window form: a rank-≤-k filter over a window plans as a
   * full (partition, order) SORT of the input — for a kNN pair stream that
@@ -57,13 +60,10 @@ case class TopKByScore(payload: Expression, ordD: Expression, ordT: Expression,
 
   override def createAggregationBuffer(): TopKBuffer = new TopKBuffer(k)
 
-  /** rank(d1,t1) strictly better than rank(d2,t2): higher score first
-    * (Spark's double total order: NaN greatest, -0.0 < 0.0), smaller
-    * tiebreak first on equal scores. */
-  private def beats(d1: Double, t1: Long, d2: Double, t2: Long): Boolean = {
-    val c = java.lang.Double.compare(d1, d2)
-    if (c != 0) c > 0 else t1 < t2
-  }
+  /** rank(d1,t1) strictly better than rank(d2,t2): higher score key
+    * first, smaller tiebreak first on equal keys. */
+  private def beats(d1: Long, t1: Long, d2: Long, t2: Long): Boolean =
+    if (d1 != d2) d1 > d2 else t1 < t2
 
   private def rescanWorst(b: TopKBuffer): Unit = {
     var w = 0
@@ -75,7 +75,7 @@ case class TopKByScore(payload: Expression, ordD: Expression, ordT: Expression,
     b.worst = w
   }
 
-  private def insert(b: TopKBuffer, d: Double, t: Long, p: Any): Unit = {
+  private def insert(b: TopKBuffer, d: Long, t: Long, p: Any): Unit = {
     if (b.n < k) {
       b.d(b.n) = d; b.t(b.n) = t; b.p(b.n) = p; b.n += 1
       if (b.n == k) rescanWorst(b)
@@ -88,8 +88,9 @@ case class TopKByScore(payload: Expression, ordD: Expression, ordT: Expression,
   override def update(b: TopKBuffer, input: InternalRow): TopKBuffer = {
     val dAny = ordD.eval(input)
     val tAny = ordT.eval(input)
-    if (dAny != null && tAny != null) {
-      val d = dAny.asInstanceOf[Double]
+    if (tAny != null) {
+      // a null score sorts below every double: DESC NULLS LAST
+      val d = if (dAny == null) Long.MinValue else OrderKey.ofDouble(dAny.asInstanceOf[Double])
       val t = tAny.asInstanceOf[Long]
       // fast reject BEFORE copying the payload — the common case
       if (b.n < k || beats(d, t, b.d(b.worst), b.t(b.worst)))
@@ -114,7 +115,7 @@ case class TopKByScore(payload: Expression, ordD: Expression, ordT: Expression,
   }
 
   @transient private lazy val proj = UnsafeProjection.create(Array[DataType](
-    ArrayType(DoubleType, containsNull = false),
+    ArrayType(LongType, containsNull = false),
     ArrayType(LongType, containsNull = false),
     dataType))
   @transient private lazy val rowBuf = new Array[Any](3)
@@ -137,7 +138,7 @@ case class TopKByScore(payload: Expression, ordD: Expression, ordT: Expression,
     b.n = ds.numElements()
     var i = 0
     while (i < b.n) {
-      b.d(i) = ds.getDouble(i)
+      b.d(i) = ds.getLong(i)
       b.t(i) = ts.getLong(i)
       b.p(i) =
         if (ps.isNullAt(i)) null

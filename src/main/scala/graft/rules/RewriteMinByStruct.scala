@@ -1,7 +1,7 @@
 package graft.rules
 
-import graft.functions.{ArgMinBy, ArgMinByLong}
-import org.apache.spark.sql.catalyst.expressions.{Cast, CreateNamedStruct, Expression}
+import graft.functions.ArgMinBy
+import org.apache.spark.sql.catalyst.expressions.{CreateNamedStruct, Expression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, AggregateFunction, MaxBy, MinBy}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -31,39 +31,23 @@ import org.apache.spark.sql.types._
   * Injected via [[graft.GraftExtensions]] (`spark.sql.extensions`).
   */
 object RewriteMinByStruct extends Rule[LogicalPlan] {
-  // First ordering field eligible for the Double-buffer ArgMinBy. LongType
-  // is deliberately EXCLUDED: distinct longs >= 2^53 collapse to equal
-  // doubles and the comparison would fall through to the tiebreak,
-  // silently picking a different winner than the builtin's exact struct
-  // order. Long-first pairs go to ArgMinByLong below instead.
-  private def numericDouble(e: Expression): Boolean = e.dataType match {
-    case DoubleType | FloatType | IntegerType | ShortType | ByteType => true
-    case _ => false
-  }
-  private def integralLong(e: Expression): Boolean = e.dataType match {
+  private def integral(e: Expression): Boolean = e.dataType match {
     case LongType | IntegerType | ShortType | ByteType => true
     case _ => false
   }
+  private def numeric(e: Expression): Boolean =
+    integral(e) || e.dataType == DoubleType || e.dataType == FloatType
 
+  // ArgMinBy orders an integral first field as an exact long, so long
+  // keys >= 2^53 keep the builtin's exact struct order
   private def rewritable(ord: CreateNamedStruct): Boolean =
     ord.valExprs.size == 2 &&
-      (numericDouble(ord.valExprs.head) || integralLong(ord.valExprs.head)) &&
-      integralLong(ord.valExprs(1)) &&
+      numeric(ord.valExprs.head) && integral(ord.valExprs(1)) &&
       ord.valExprs.forall(!_.nullable)
 
   private def argBy(payload: Expression, ord: CreateNamedStruct,
-                    max: Boolean): AggregateFunction = {
-    val d = ord.valExprs.head
-    val t = ord.valExprs(1)
-    val tL = if (t.dataType == LongType) t else Cast(t, LongType)
-    if (integralLong(d)) {
-      // Both fields integral: exact (long, long) lexicographic order —
-      // correct even above 2^53 where a Double buffer would lose bits.
-      ArgMinByLong(payload, if (d.dataType == LongType) d else Cast(d, LongType), tL, max = max)
-    } else {
-      ArgMinBy(payload, if (d.dataType == DoubleType) d else Cast(d, DoubleType), tL, max = max)
-    }
-  }
+                    max: Boolean): AggregateFunction =
+    ArgMinBy.coerced(payload, ord.valExprs.head, ord.valExprs(1), max = max)
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformAllExpressions {
     case ae @ AggregateExpression(MinBy(payload, ord: CreateNamedStruct), _, false, None, _)

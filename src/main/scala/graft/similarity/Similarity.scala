@@ -1,7 +1,7 @@
 package graft.similarity
 
+import graft.operators.Rankings.topKByScore
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Approximate-nearest-neighbor search over an embedding column
@@ -13,9 +13,13 @@ import org.apache.spark.sql.functions._
   *    bounded (dedup audits, eval queries).
   *  - [[lshCosineTopK]]: random-hyperplane LSH — the 100 TB path. Corpus is
   *    bucketed once by an nBits-bit hyperplane signature (a linear scan);
-  *    each query probes only its bucket (+ optional multi-probe neighbors),
+  *    each query probes its bucket and the nBits single-bit-flip neighbors,
   *    turning the search into an equi-join on bucket ids. Recall tunes via
-  *    nBits/multi-probe; verified against the brute-force tier in tests.
+  *    nBits; verified against the brute-force tier in tests.
+  *
+  * Every exact per-query top-k ranks by (cos_sim DESC, neighbor_id ASC)
+  * through [[graft.operators.Rankings.topKByScore]] — a bounded-buffer
+  * aggregate with map-side partials, never a sort of the pair stream.
   *
   * Dot products are sequential left-fold `aggregate` over `zip_with` in
   * double precision — deterministic, codegen-friendly, no UDF.
@@ -32,6 +36,28 @@ object Similarity {
   def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
 
   private def asDouble(c: Column): Column = transform(c, _.cast("double"))
+
+  /** (id, the vector as doubles, its [[graft.functions.NormD]] norm) under
+    * the given output names. */
+  private def vectors(df: DataFrame, idCol: String, vecCol: String,
+                      id: String, v: String, n: String): DataFrame =
+    df.select(col(idCol).as(id), asDouble(col(vecCol)).as(v))
+      .withColumn(n, graft.functions.NormD(col(v)))
+
+  private def queryVectors(df: DataFrame, idCol: String, vecCol: String): DataFrame =
+    vectors(df, idCol, vecCol, "query_id", "qv", "qn")
+
+  private def corpusVectors(df: DataFrame, idCol: String, vecCol: String): DataFrame =
+    vectors(df, idCol, vecCol, "neighbor_id", "nv", "nn")
+
+  private val cosSim: Column =
+    graft.functions.DotProductD(col("qv"), col("nv")) / (col("qn") * col("nn"))
+
+  /** Top-k neighbors per query of a (query_id, neighbor_id, cos_sim, …)
+    * candidate stream by (cos_sim DESC, neighbor_id ASC). */
+  private def topKByCos(cand: DataFrame, k: Int, keys: Seq[String] = Seq("query_id"),
+                        payload: Seq[String] = Seq("neighbor_id", "cos_sim")): DataFrame =
+    topKByScore(cand, keys, col("cos_sim"), col("neighbor_id"), k, payload)
 
   /** Fail-loud eval-set size bound for the brute-force paths (q224 etc.):
     * an all-pairs join is only legitimate at eval-set scale, so the
@@ -64,16 +90,9 @@ object Similarity {
     // norms once per ROW; the per-pair work is one tight-loop dot — same
     // IEEE fold as the HOF form (values bit-identical), ~50× cheaper, which
     // is the difference that matters when the corpus side is 100 TB
-    val q = queries.select(col(idCol).as("query_id"), asDouble(col(vecCol)).as("qv"))
-      .withColumn("qn", graft.functions.NormD(col("qv")))
-    val c = corpus.select(col(idCol).as("neighbor_id"), asDouble(col(vecCol)).as("nv"))
-      .withColumn("nn", graft.functions.NormD(col("nv")))
-    val sim = graft.functions.DotProductD(col("qv"), col("nv")) / (col("qn") * col("nn"))
-    val w = Window.partitionBy("query_id").orderBy(col("cos_sim").desc, col("neighbor_id").asc)
-    broadcast(q).crossJoin(c)
-      .withColumn("cos_sim", sim)
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    val q = queryVectors(queries, idCol, vecCol)
+    val c = corpusVectors(corpus, idCol, vecCol)
+    topKByCos(broadcast(q).crossJoin(c).withColumn("cos_sim", cosSim), k)
       .select("query_id", "neighbor_id", "rank", "cos_sim")
   }
 
@@ -227,25 +246,18 @@ object Similarity {
     * candidates. */
   def lshCosineTopK(queries: DataFrame, corpus: DataFrame,
                     idCol: String, vecCol: String, k: Int,
-                    nBits: Int = 8, dim: Int = 64, multiProbe: Boolean = true,
+                    nBits: Int = 8, dim: Int = 64,
                     family: String = "rng"): DataFrame = {
-    val c = corpus.select(col(idCol).as("neighbor_id"), asDouble(col(vecCol)).as("nv"))
+    val c = corpusVectors(corpus, idCol, vecCol)
       .withColumn("bucket", hyperplaneSignature(col("nv"), nBits, dim, family))
-      .withColumn("nn", graft.functions.NormD(col("nv")))
-    val q0 = queries.select(col(idCol).as("query_id"), asDouble(col(vecCol)).as("qv"))
+    val sig = col("sig")
+    val q = queryVectors(queries, idCol, vecCol)
       .withColumn("sig", hyperplaneSignature(col("qv"), nBits, dim, family))
-      .withColumn("qn", graft.functions.NormD(col("qv")))
-    val probes =
-      if (!multiProbe) array(col("sig"))
-      else array((col("sig") +: (0 until nBits).map(b => col("sig").bitwiseXOR(lit(1 << b)))): _*)
-    val q = q0.withColumn("bucket", explode(probes)).drop("sig")
-    val sim = graft.functions.DotProductD(col("qv"), col("nv")) / (col("qn") * col("nn"))
-    val w = Window.partitionBy("query_id").orderBy(col("cos_sim").desc, col("neighbor_id").asc)
-    q.join(c, Seq("bucket"))
-      .withColumn("cos_sim", sim)
-      .dropDuplicates("query_id", "neighbor_id")
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+      .withColumn("bucket",
+        explode(array(sig +: (0 until nBits).map(b => sig.bitwiseXOR(lit(1 << b))): _*)))
+      .drop("sig")
+    topKByCos(q.join(c, Seq("bucket")).withColumn("cos_sim", cosSim)
+      .dropDuplicates("query_id", "neighbor_id"), k)
       .select("query_id", "neighbor_id", "rank", "cos_sim")
   }
 
@@ -262,47 +274,16 @@ object Similarity {
                      idCol: String, vecCol: String, k: Int,
                      nCells: Int, nProbes: Seq[Int]): DataFrame = {
     require(nProbes.nonEmpty && nProbes.forall(_ >= 1))
-    val maxP = nProbes.max
-    val c0 = corpus.select(col(idCol).as("neighbor_id"), asDouble(col(vecCol)).as("nv"))
-      .withColumn("nn", graft.functions.NormD(col("nv")))
-      .filter(col("nn") > 0)
-    val centroids: Array[(Long, Array[Double], Double)] = c0
-      .orderBy("neighbor_id").limit(nCells)
-      .select(col("neighbor_id"), col("nv"))
-      .collect()
-      .map { r =>
-        val id = r.get(0) match { case l: Long => l; case i: Int => i.toLong }
-        val v = r.getSeq[Double](1).toArray
-        (id, v, math.sqrt(v.foldLeft(0.0)((a, x) => a + x * x)))
-      }
-      .sortBy(_._1)
-    def centCos(vCol: String, nCol: String)(c: (Long, Array[Double], Double)): Column =
-      graft.functions.DotProductD(col(vCol), array(c._2.map(lit).toIndexedSeq: _*)) /
-        (col(nCol) * lit(c._3))
-    val assigned = c0.withColumn("cell",
-      -greatest(centroids.toIndexedSeq.map(c =>
-        struct(centCos("nv", "nn")(c).as("c"), lit(-c._1).as("nid"))): _*)
-        .getField("nid"))
-    val q0 = queries.select(col(idCol).as("query_id"), asDouble(col(vecCol)).as("qv"))
-      .withColumn("qn", graft.functions.NormD(col("qv")))
-      .filter(col("qn") > 0)
-    val rankedCells = slice(array_sort(array(centroids.toIndexedSeq.map(c =>
-      struct((-centCos("qv", "qn")(c)).as("negc"), lit(c._1).as("cid"))): _*)),
-      1, maxP)
+    val ivf = lowestIdIvf(corpus, idCol, vecCol, nCells)
+    val q0 = queryVectors(queries, idCol, vecCol).filter(col("qn") > 0)
     val probes = q0.select(col("query_id"), col("qv"), col("qn"),
-      posexplode(transform(rankedCells, p => p.getField("cid")))
-        .as(Seq("prank0", "cell")))
-    val cand = probes.join(assigned, Seq("cell"))
-      .withColumn("cos_sim",
-        graft.functions.DotProductD(col("qv"), col("nv")) / (col("qn") * col("nn")))
+      posexplode(ivf.probeCells(nProbes.max)).as(Seq("prank0", "cell")))
+    val cand = probes.join(ivf.assigned, Seq("cell"))
+      .withColumn("cos_sim", cosSim)
       .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("prank0"))
     val settings = array(nProbes.map(lit): _*)
-    val ivfTop = cand.withColumn("n_probe", explode(settings))
-      .filter(col("prank0") < col("n_probe"))
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy("n_probe", "query_id")
-          .orderBy(col("cos_sim").desc, col("neighbor_id").asc)))
-      .filter(col("rnk") <= k)
+    val ivfTop = topKByCos(cand.withColumn("n_probe", explode(settings))
+        .filter(col("prank0") < col("n_probe")), k, keys = Seq("n_probe", "query_id"))
       .select(col("n_probe"), col("query_id"), col("neighbor_id"))
     val exact = cosineTopK(queries, corpus, idCol, vecCol, k)
       .select(col("query_id"), col("neighbor_id"))
@@ -349,12 +330,7 @@ object Similarity {
     val probes = q0.withColumn("cell",
       explode(transform(probeCells, p => p.getField("cid"))))
     val sim = dot(col("qv"), col("nv")) / (col("qn") * col("nn"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cos_sim").desc, col("neighbor_id").asc)
-    probes.join(assigned, Seq("cell"))
-      .withColumn("cos_sim", sim)
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    topKByCos(probes.join(assigned, Seq("cell")).withColumn("cos_sim", sim), k)
       .select(col("query_id"), col("neighbor_id"), col("rank"),
         round(col("cos_sim"), 6).as("cos_sim"))
   }
@@ -381,30 +357,20 @@ object Similarity {
   def matryoshkaTopK(queries: DataFrame, corpus: DataFrame,
                      idCol: String, vecCol: String, k: Int,
                      coarseDim: Int = 16, candidates: Int = 20): DataFrame = {
-    val q = queries.select(col(idCol).as("query_id"), asDouble(col(vecCol)).as("qv"))
+    val q = queryVectors(queries, idCol, vecCol)
       .withColumn("qc", slice(col("qv"), 1, coarseDim))
-      .withColumn("qn", graft.functions.NormD(col("qv")))
       .withColumn("qcn", graft.functions.NormD(col("qc")))
     // stage-1 corpus projection: prefix + its norm only (the narrow scan)
     val cCoarse = corpus.select(col(idCol).as("neighbor_id"),
         slice(asDouble(col(vecCol)), 1, coarseDim).as("nc"))
       .withColumn("ncn", graft.functions.NormD(col("nc")))
     val coarse = graft.functions.DotProductD(col("qc"), col("nc")) / (col("qcn") * col("ncn"))
-    val wC = Window.partitionBy("query_id").orderBy(col("coarse").desc, col("neighbor_id").asc)
-    val cand = broadcast(q).crossJoin(cCoarse)
-      .withColumn("coarse", coarse)
-      .withColumn("crnk", row_number().over(wC))
-      .filter(col("crnk") <= candidates)
-      .select("query_id", "qv", "qn", "neighbor_id")
+    val cand = topKByScore(broadcast(q).crossJoin(cCoarse), Seq("query_id"),
+        coarse, col("neighbor_id"), candidates, Seq("neighbor_id"))
+      .join(broadcast(q.select("query_id", "qv", "qn")), "query_id")
     // stage-2: fetch full vectors for candidates only, exact rerank
-    val cFull = corpus.select(col(idCol).as("neighbor_id"), asDouble(col(vecCol)).as("nv"))
-      .withColumn("nn", graft.functions.NormD(col("nv")))
-    val sim = graft.functions.DotProductD(col("qv"), col("nv")) / (col("qn") * col("nn"))
-    val wF = Window.partitionBy("query_id").orderBy(col("cos_sim").desc, col("neighbor_id").asc)
-    cand.join(cFull, Seq("neighbor_id"))
-      .withColumn("cos_sim", sim)
-      .withColumn("rank", row_number().over(wF))
-      .filter(col("rank") <= k)
+    topKByCos(cand.join(corpusVectors(corpus, idCol, vecCol), Seq("neighbor_id"))
+        .withColumn("cos_sim", cosSim), k)
       .select("query_id", "neighbor_id", "rank", "cos_sim")
   }
 
@@ -442,28 +408,20 @@ object Similarity {
                         idCol: String, vecCol: String, k: Int,
                         dim: Int = 64, candidates: Int = 20): DataFrame = {
     val nWords = dim / 32
-    val q = queries.select(col(idCol).as("query_id"), asDouble(col(vecCol)).as("qv"))
+    val q = queryVectors(queries, idCol, vecCol)
       .withColumn("qw", signPack(col("qv"), dim))
-      .withColumn("qn", graft.functions.NormD(col("qv")))
     val cPacked = corpus.select(col(idCol).as("neighbor_id"),
       signPack(asDouble(col(vecCol)), dim).as("nw"))
     val hamming = (0 until nWords).map { w =>
       bit_count(element_at(col("qw"), w + 1).bitwiseXOR(element_at(col("nw"), w + 1)))
     }.reduce(_ + _).cast("long")
-    val wH = Window.partitionBy("query_id").orderBy(col("hamming").asc, col("neighbor_id").asc)
-    val cand = broadcast(q).crossJoin(cPacked)
-      .withColumn("hamming", hamming)
-      .withColumn("crnk", row_number().over(wH))
-      .filter(col("crnk") <= candidates)
-      .select("query_id", "qv", "qn", "neighbor_id", "hamming")
-    val cFull = corpus.select(col(idCol).as("neighbor_id"), asDouble(col(vecCol)).as("nv"))
-      .withColumn("nn", graft.functions.NormD(col("nv")))
-    val sim = graft.functions.DotProductD(col("qv"), col("nv")) / (col("qn") * col("nn"))
-    val wF = Window.partitionBy("query_id").orderBy(col("cos_sim").desc, col("neighbor_id").asc)
-    cand.join(cFull, Seq("neighbor_id"))
-      .withColumn("cos_sim", sim)
-      .withColumn("rank", row_number().over(wF))
-      .filter(col("rank") <= k)
+    // hamming ASC as score DESC: -hamming is a small exact integer
+    val cand = topKByScore(broadcast(q).crossJoin(cPacked).withColumn("hamming", hamming),
+        Seq("query_id"), -col("hamming"), col("neighbor_id"), candidates,
+        Seq("neighbor_id", "hamming"))
+      .join(broadcast(q.select("query_id", "qv", "qn")), "query_id")
+    topKByCos(cand.join(corpusVectors(corpus, idCol, vecCol), Seq("neighbor_id"))
+        .withColumn("cos_sim", cosSim), k, payload = Seq("neighbor_id", "hamming", "cos_sim"))
       .select("query_id", "neighbor_id", "rank", "hamming", "cos_sim")
   }
 
@@ -485,28 +443,18 @@ object Similarity {
     * the IVF shape is unchanged, and a k-means-refined centroid table can
     * be swapped in without touching the operator.)
     *
-    * Scale shape: the centroid table (nCells rows) broadcasts to both
-    * sides — corpus assignment is ONE broadcast pass over the corpus (no
-    * shuffle of the corpus itself beyond the cell equi-join), queries
-    * probe nProbe cells each, and the only shuffle keys are cell ids,
-    * uniformly loaded when nCells ≫ skew. Ties in the nearest-centroid
-    * argmin break deterministically by centroid id.
-    *
-    * Two assignment forms, result-identical (IvfSpec proves it):
-    *  - nCells <= `inlineMaxCells`: centroids inlined as literal struct
-    *    expressions — the plan IS the centroid table, trivially auditable.
-    *  - nCells > `inlineMaxCells` (the 100 TB path — real corpora want
-    *    nCells ≈ 10³–10⁴): [[graft.functions.NearestCentroidCell]] /
-    *    [[graft.functions.TopProbeCells]] carry the centroid matrix as ONE
-    *    reference object, so plan size and codegen stay O(1) in nCells
-    *    (the literal form is an O(nCells·dim) expression tree that pushes
-    *    Janino past its method limit around nCells ≈ 10³) and the probe
-    *    side replaces the O(nCells log nCells) in-row sort with an
-    *    O(nCells·nProbe) selection. Assignment stays a pure map-side
-    *    expression in both forms — deliberately NOT a broadcast-join +
-    *    arg-min aggregation, which would explode the corpus ×nCells and
-    *    re-aggregate it (a full corpus shuffle the map-only form never
-    *    pays).
+    * Scale shape: the centroid table (nCells rows) rides in
+    * [[graft.functions.NearestCentroidCell]] /
+    * [[graft.functions.TopProbeCells]] as ONE reference object, so plan
+    * size and codegen stay O(1) in nCells (real corpora want nCells ≈
+    * 10³–10⁴) and the probe side is an O(nCells·nProbe) selection with no
+    * in-row sort. Corpus assignment is ONE map-side pass over the corpus —
+    * deliberately NOT a broadcast-join + arg-min aggregation, which would
+    * explode the corpus ×nCells and re-aggregate it (a full corpus shuffle
+    * the map-only form never pays); queries probe nProbe cells each, and
+    * the only shuffle keys are cell ids, uniformly loaded when nCells ≫
+    * skew. Ties in the nearest-centroid argmax break deterministically to
+    * the lowest centroid id.
     *
     * Precondition: embeddings are non-null, uniform-dimension, and
     * nonzero-norm. Zero-norm vectors have undefined cosine (NaN), and
@@ -515,62 +463,45 @@ object Similarity {
     * them outright. */
   def ivfCosineTopK(queries: DataFrame, corpus: DataFrame,
                     idCol: String, vecCol: String, k: Int,
-                    nCells: Int = 16, nProbe: Int = 4,
-                    inlineMaxCells: Int = 32): DataFrame = {
-    val c0 = corpus.select(col(idCol).as("neighbor_id"), asDouble(col(vecCol)).as("nv"))
-      .withColumn("nn", graft.functions.NormD(col("nv")))
-      .filter(col("nn") > 0)
+                    nCells: Int = 16, nProbe: Int = 4): DataFrame = {
+    val ivf = lowestIdIvf(corpus, idCol, vecCol, nCells)
+    val probes = queryVectors(queries, idCol, vecCol).filter(col("qn") > 0)
+      .withColumn("cell", explode(ivf.probeCells(nProbe)))
+    topKByCos(probes.join(ivf.assigned, Seq("cell")).withColumn("cos_sim", cosSim), k)
+      .select("query_id", "neighbor_id", "rank", "cos_sim")
+  }
+
+  /** The lowest-id IVF index of [[ivfCosineTopK]] and [[ivfRecallCurve]]:
+    * the nonzero-norm corpus (neighbor_id, nv, nn) with its nearest `cell`,
+    * and the query side's (qv, qn) probe list. */
+  private final class LowestIdIvf(val assigned: DataFrame, ids: Array[Long],
+                                  vecs: Array[Array[Double]], norms: Array[Double]) {
+    def probeCells(nProbe: Int): Column =
+      graft.functions.TopProbeCells(col("qv"), col("qn"), ids, vecs, norms, nProbe)
+  }
+
+  private def lowestIdIvf(corpus: DataFrame, idCol: String, vecCol: String,
+                          nCells: Int): LowestIdIvf = {
+    val c0 = corpusVectors(corpus, idCol, vecCol).filter(col("nn") > 0)
     // The centroid table is nCells rows by construction — materialize it to
     // the driver (one tiny job, the Stats/PCA precedent). The norm
     // replicates NormD's fold (sequential acc + x·x, then sqrt) so cosines
     // are bit-identical to what a joined NormD column would give.
-    val centroids: Array[(Long, Array[Double], Double)] = c0
+    val centroids = c0
       .orderBy("neighbor_id").limit(nCells)
       .select(col("neighbor_id"), col("nv"))
       .collect()
       .map { r =>
         val id = r.get(0) match { case l: Long => l; case i: Int => i.toLong }
-        val v = r.getSeq[Double](1).toArray
-        (id, v, math.sqrt(v.foldLeft(0.0)((a, x) => a + x * x)))
+        (id, r.getSeq[Double](1).toArray)
       }
       .sortBy(_._1)
-    val centIds = centroids.map(_._1)
-    val centVecs = centroids.map(_._2)
-    val centNorms = centroids.map(_._3)
-    val inline = centroids.length <= inlineMaxCells
-    def centCos(vCol: String, nCol: String)(c: (Long, Array[Double], Double)): Column =
-      graft.functions.DotProductD(col(vCol), array(c._2.map(lit).toIndexedSeq: _*)) /
-        (col(nCol) * lit(c._3))
-    // nearest cell per row: max of struct(cos, -cent_id) — cos desc with
-    // deterministic cent_id-asc tie-break — evaluated as a pure expression
-    def cellStructs(vCol: String, nCol: String): Seq[Column] =
-      centroids.toIndexedSeq.map(c =>
-        struct(centCos(vCol, nCol)(c).as("c"), lit(-c._1).as("nid")))
-    val assigned =
-      if (inline) c0.withColumn("cell",
-        -greatest(cellStructs("nv", "nn"): _*).getField("nid"))
-      else c0.withColumn("cell", graft.functions.NearestCentroidCell(
-        col("nv"), col("nn"), centIds, centVecs, centNorms))
-    // query side: top-nProbe cells — in-row sort of the literal struct
-    // array (inline form) or the O(1)-plan-size selection expression
-    val q0 = queries.select(col(idCol).as("query_id"), asDouble(col(vecCol)).as("qv"))
-      .withColumn("qn", graft.functions.NormD(col("qv")))
-      .filter(col("qn") > 0)
-    val probeCells =
-      if (inline) {
-        val sorted = slice(array_sort(array(centroids.toIndexedSeq.map(c =>
-          struct((-centCos("qv", "qn")(c)).as("negc"), lit(c._1).as("cid"))): _*)),
-          1, nProbe)
-        transform(sorted, p => p.getField("cid"))
-      } else graft.functions.TopProbeCells(
-        col("qv"), col("qn"), centIds, centVecs, centNorms, nProbe)
-    val probes = q0.withColumn("cell", explode(probeCells))
-    val sim = graft.functions.DotProductD(col("qv"), col("nv")) / (col("qn") * col("nn"))
-    val w = Window.partitionBy("query_id").orderBy(col("cos_sim").desc, col("neighbor_id").asc)
-    probes.join(assigned, Seq("cell"))
-      .withColumn("cos_sim", sim)
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "rank", "cos_sim")
+    val ids = centroids.map(_._1)
+    val vecs = centroids.map(_._2)
+    val norms = vecs.map(v => math.sqrt(v.foldLeft(0.0)((a, x) => a + x * x)))
+    new LowestIdIvf(
+      c0.withColumn("cell",
+        graft.functions.NearestCentroidCell(col("nv"), col("nn"), ids, vecs, norms)),
+      ids, vecs, norms)
   }
 }

@@ -141,19 +141,23 @@ object EventsStream {
         java.util.Collections.emptyList[org.apache.spark.sql.Row](), out.schema)
     else parquetBase match {
       case Some(base) =>
-        val src = if (mode == "complete") s"$base/latest" else s"$base/batch=*"
-        val fs = new org.apache.hadoop.fs.Path(base)
-          .getFileSystem(s.sessionState.newHadoopConf())
-        if (fs.globStatus(new org.apache.hadoop.fs.Path(src)) == null ||
-            fs.globStatus(new org.apache.hadoop.fs.Path(src)).isEmpty)
-          s.createDataFrame(
-            java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-            out.schema)
-        // drop the partition column Spark infers from the batch=<id>
-        // directory names — the contract schema is the query's own
-        else s.read.parquet(src).drop("batch")
+        readGlobbed(s, if (mode == "complete") s"$base/latest" else s"$base/batch=*")
+          .getOrElse(s.createDataFrame(
+            java.util.Collections.emptyList[org.apache.spark.sql.Row](), out.schema))
       case None => s.table(qname)
     }
+  }
+
+  /** The parquet directories `glob` lists, read as one relation; None when
+    * it lists nothing. The glob is expanded here, ONCE, not by the reader:
+    * a glob path makes FileStreamSink's metadata probe log a
+    * FileNotFoundException per read, and listed `batch=<id>` roots infer
+    * no partition column, so the schema is the written one. */
+  private def readGlobbed(s: SparkSession, glob: String): Option[DataFrame] = {
+    val path = new org.apache.hadoop.fs.Path(glob)
+    val dirs = Option(path.getFileSystem(s.sessionState.newHadoopConf()).globStatus(path))
+      .getOrElse(Array.empty).map(_.getPath.toString)
+    if (dirs.isEmpty) None else Some(s.read.parquet(dirs.toIndexedSeq: _*))
   }
 
   /** Streaming scan of the events table, LAYOUT-AGNOSTIC: the harness SF
@@ -344,7 +348,8 @@ object EventsStream {
       }
       runOnce()
       runOnce() // the simulated retry: same batch ids, same paths, no dupes
-      s.read.parquet(s"$out/batch=*")
+      readGlobbed(s, s"$out/batch=*")
+        .getOrElse(throw new IllegalStateException(s"no batch written under $out"))
         .select(
           unix_timestamp(col("window.start")).as("win_start"),
           col("event_type"),

@@ -31,7 +31,7 @@ object DumpPlans {
     "q52_range_join" -> "range join as bin-exploded broadcast hash join (no nested loop)",
     "q58_top_bigrams" -> "global top-k via TakeOrderedAndProject (parallel partial heaps, no single-partition window exchange)",
     "q69_cosine_neardup" -> "exact cosine near-dup: grid-cell equi-join (no cross join), per-row norms, tight-loop dot verify",
-    "q73_ann_ivf" -> "IVF-flat ANN: centroid literals inlined, shuffle-free cell assignment (pure projection), probe-cell equi-join",
+    "q73_ann_ivf" -> "IVF-flat ANN: centroid table carried by nearest_centroid_cell / top_probe_cells (O(1) plan size in nCells), shuffle-free cell assignment (pure projection), probe-cell equi-join, top-k in ObjectHashAggregate (top_k_by, map-side partials)",
     "q80_partition_prune" -> "date-partitioned layout: PartitionFilters prune whole day-directories at planning time (3 of 30 read); filter never touches file contents",
     "q85_pack_slices" -> "two-phase prefix sum: per-bucket parallel window, the only unpartitioned window is over O(buckets) offset rows, then codegen'd explode over each doc's spanned sequences",
     "q87_asof_nearest" -> "both as-of directions from ONE exchange+sort: a single Window operator computes the backward carry (preceding frame) and forward carry (following frame) over the same ordering",
@@ -42,7 +42,7 @@ object DumpPlans {
     "q137_retention" -> "retention cohorts: first-week via min-over-window on the user_id shuffle (NO BroadcastExchange on the per-user side), then one hash agg",
     "q177_weighted_reservoir" -> "A-ES weighted reservoir: per-source rank filter plans as WindowGroupLimit (partial per-partition top-k heaps before the source shuffle, no full sort)",
     "q148_ks_test" -> "two-sample KS: BOTH cumulative counts ride one multi-weight two-phase prefix sum (per-bucket windows + an O(buckets) offset window) — no corpus-wide window, no second pass",
-    "q149_bloom_join" -> "runtime bloom pre-filter: bloom_build partials merge map-side (ObjectHashAggregate), the 1 KB bitset is inlined as a literal (the q73 centroid device), and the fact scan's Filter applies the probe BEFORE the exchange — the shuffle carries only probable matches",
+    "q149_bloom_join" -> "runtime bloom pre-filter: bloom_build partials merge map-side (ObjectHashAggregate), the 1 KB bitset is inlined as a literal, and the fact scan's Filter applies the probe BEFORE the exchange — the shuffle carries only probable matches",
     "q193_balanced_shards" -> "token-balanced sharding: global rank by weight via VALUE-range buckets — per-bucket parallel windows, the only SinglePartition window is the O(buckets) offset table, broadcast back; snake shard is pure projection",
     "q196_hits" -> "HITS power iteration: ONE src-partitioned edge checkpoint (dedup rides its repartition exchange-free); hub half-steps read it via a byte-gated auth BROADCAST so the groupBy(src) agg needs no exchange; max-normalizers are 1-row broadcast cross joins",
     "q200_link_prediction" -> "common-neighbor wedges: apex-cap left-semi prunes hub apexes BEFORE the self-join; exact-count hash agg; degree joins after the minCommon filter shrink the pair stream first",

@@ -163,8 +163,8 @@ object PlanAudit {
         |match_count), min/max(struct) argmin shapes (q220/q231/q260/q276/
         |q287 → typed arg_min/max_by), string min/max in the q261 profiler
         |(→ typed min_str/max_str), and q359's exact-long argmax (→ typed
-        |arg_max_by_l, the (long, long)-ordered sibling that keeps the
-        |exactness the double-ordered buffer could not above 2^53).
+        |arg_max_by, which orders an integral key as an exact long, so it
+        |keeps the exactness a double key could not above 2^53).
         |""".stripMargin)
     sb.append("\n## Expression size of the optimized plan\n\n")
     sb.append(s"Limit: $ExpressionNodeLimit expression nodes per query. " +

@@ -1,7 +1,7 @@
 package graft
 
 import graft.functions.Lambert93
-import graft.operators.Cleaning
+import graft.operators.{Cleaning, Rankings}
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -129,6 +129,27 @@ class PropertySpec extends AnyFunSuite {
         java.lang.Double.doubleToRawLongBits(rd), s"dot: $fd vs $rd")
       assert(java.lang.Double.doubleToRawLongBits(fn) ==
         java.lang.Double.doubleToRawLongBits(rn), s"norm: $fn vs $rn")
+    }
+  }
+
+  test("topKByScore == the rank-<=k window over ±0.0, NaN, ±Inf, nulls and tied scores") {
+    val score = Gen.frequency(
+      6 -> Gen.chooseNum(-3, 3).map(i => Option(i / 2.0)),
+      1 -> Gen.oneOf(0.0, -0.0, Double.NaN, Double.PositiveInfinity,
+        Double.NegativeInfinity).map(Option(_)),
+      1 -> Gen.const(Option.empty[Double]))
+    val gen = Gen.zip(Gen.chooseNum(1, 6), Gen.listOfN(60, Gen.zip(Gen.chooseNum(0, 4), score)))
+    samples(gen, 8).foreach { case (k, rows) =>
+      val df = rows.zipWithIndex.map { case ((g, s), nid) => (g.toLong, nid.toLong, s) }
+        .toDF("g", "nid", "s")
+      val win = df.withColumn("rank", row_number().over(
+          org.apache.spark.sql.expressions.Window.partitionBy("g")
+            .orderBy(col("s").desc, col("nid").asc)))
+        .filter(col("rank") <= k)
+        .select("g", "rank", "nid").as[(Long, Int, Long)].collect().toSet
+      val agg = Rankings.topKByScore(df, Seq("g"), col("s"), col("nid"), k, Seq("nid"))
+        .select("g", "rank", "nid").as[(Long, Int, Long)].collect().toSet
+      assert(agg == win, s"k=$k rows=$rows")
     }
   }
 

@@ -95,27 +95,32 @@ class RewriteRuleSpec extends AnyFunSuite {
     assert(df.as[(String, String)].collect().toMap == Map("g" -> "real"))
   }
 
-  test("both-integral ordering pair rewrites to the exact arg_min_by_l") {
-    val df = rows.toDF("g", "name", "dist", "id")
-      .groupBy("g").agg(min_by(col("name"), struct(col("id"), col("id"))).as("best"))
+  test("both-integral ordering pair rewrites to the exact arg_min_by") {
+    // 2^54 + 1 and 2^54 + 2 round to the same double; the integral key
+    // must still order them, so min_by picks lo even though its id is larger
+    val big = Seq(("g", "hi", 18014398509481986L, 1), ("g", "lo", 18014398509481985L, 2))
+      .toDF("g", "name", "k", "id")
+    val df = big.groupBy("g").agg(min_by(col("name"), struct(col("k"), col("id"))).as("best"))
     val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("arg_min_by_l"), plan)
+    assert(plan.contains("arg_min_by"), plan)
     assert(!plan.contains("SortAggregate"), plan)
+    assert(df.as[(String, String)].collect().toMap == Map("g" -> "lo"))
   }
 
   test("long-first rewrite is exact above 2^53 (double buffer would collapse)") {
-    // 2^53 and 2^53+1 are the same Double; the (long,long) buffer must
-    // still order them correctly — min_by picks lo, max_by picks hi.
-    val big = Seq(("g", "lo", 9007199254740992L, 1L),
-      ("g", "hi", 9007199254740993L, 2L))
+    // 2^53 and 2^53+1 are the same Double; the long key must still
+    // order them correctly — min_by picks lo, max_by picks hi, even where
+    // the tiebreak alone would pick the other row
+    val big = Seq(("g", "lo", 9007199254740992L, 2L),
+      ("g", "hi", 9007199254740993L, 1L))
       .toDF("g", "name", "k", "id")
     val mn = big.groupBy("g")
       .agg(min_by(col("name"), struct(col("k"), col("id"))).as("best"))
-    assert(mn.queryExecution.executedPlan.toString.contains("arg_min_by_l"))
+    assert(mn.queryExecution.executedPlan.toString.contains("arg_min_by"))
     assert(mn.as[(String, String)].collect().toMap == Map("g" -> "lo"))
     val mx = big.groupBy("g")
       .agg(max_by(col("name"), struct(col("k"), col("id"))).as("best"))
-    assert(mx.queryExecution.executedPlan.toString.contains("arg_max_by_l"))
+    assert(mx.queryExecution.executedPlan.toString.contains("arg_max_by"))
     assert(mx.as[(String, String)].collect().toMap == Map("g" -> "hi"))
   }
 

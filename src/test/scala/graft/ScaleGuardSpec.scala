@@ -13,6 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class ScaleGuardSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
+  private val Q73MaxNodes = 140
 
   private def executedPlan(name: String): String = {
     val df = SparkEntry.queries(name)(spark, TestSpark.sf0001)
@@ -183,6 +184,50 @@ class ScaleGuardSpec extends AnyFunSuite {
     assert(!all.exists(_.isInstanceOf[ExpandExec]), s"q21 plans an Expand:\n$plan")
     val shuffles = all.count(_.isInstanceOf[ShuffleExchangeExec])
     assert(shuffles == 2, s"expected 2 shuffle exchanges, saw $shuffles:\n$plan")
+  }
+
+  // Exact per-query top-k runs on the TopKByScore aggregate: the pair
+  // stream (the broadcast cross join) feeds an ObjectHashAggregate's
+  // map-side partials and never a sort or a window, which would order
+  // every candidate pair (a 26.9 GB spill at a 20k-vector eval set).
+  for (q <- Seq("q27_ann_cosine", "q120_binary_hamming"))
+    test(s"$q: the pair stream reaches a hash aggregate, not a Window or Sort") {
+      import org.apache.spark.sql.execution.{SortExec, SparkPlan}
+      import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+      import org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec
+      import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
+      import org.apache.spark.sql.execution.window.WindowExec
+      def kids(p: SparkPlan): Seq[SparkPlan] = p match {
+        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+        case s: QueryStageExec => Seq(s.plan)
+        case other => other.children
+      }
+      def all(p: SparkPlan): Seq[SparkPlan] = p +: kids(p).flatMap(all)
+      // the pair stream reaches `p` with no aggregate in between
+      def pairsBelow(p: SparkPlan): Boolean = p match {
+        case _: BroadcastNestedLoopJoinExec => true
+        case _: ObjectHashAggregateExec => false
+        case other => kids(other).exists(pairsBelow)
+      }
+      val df = SparkEntry.queries(q)(spark, TestSpark.sf0001)
+      df.collect()
+      val plan = df.queryExecution.executedPlan
+      val nodes = all(plan)
+      assert(nodes.exists(_.isInstanceOf[BroadcastNestedLoopJoinExec]), s"no pair stream:\n$plan")
+      assert(nodes.exists(_.isInstanceOf[ObjectHashAggregateExec]), s"no top-k aggregate:\n$plan")
+      assert(!nodes.exists(_.isInstanceOf[WindowExec]), s"$q plans a Window:\n$plan")
+      assert(!nodes.exists(n => n.isInstanceOf[SortExec] && pairsBelow(n)),
+        s"$q sorts the pair stream:\n$plan")
+    }
+
+  test("q73_ann_ivf: the centroid table is not inlined into the plan") {
+    // the centroid table as literal structs, spelled twice (a greatest()
+    // assignment and an array_sort probe ranking), read 514 optimized-plan
+    // expression nodes; the reference-object kernels carry it as data (140)
+    val df = SparkEntry.queries("q73_ann_ivf")(spark, TestSpark.sf0001)
+    val nodes = graft.tools.PlanAudit.expressionNodes(df.queryExecution.optimizedPlan)
+    assert(nodes <= Q73MaxNodes, s"q73 optimized plan has $nodes expression nodes:\n" +
+      df.queryExecution.optimizedPlan)
   }
 
   // Building a single-table query is driver work only: the table read takes

@@ -99,48 +99,23 @@ class SimilaritySpec extends AnyFunSuite {
     assert(recall >= 0.7, s"IVF recall too low on clustered data: $recall")
   }
 
-  test("ivfCosineTopK: literal-inline and reference-object assignment forms are identical") {
-    // same corpus/queries through both forms — inlineMaxCells above/below
-    // nCells flips the path; results (ids, ranks, AND cosines) must match
-    // bit-for-bit, proving the O(1)-plan-size scale path preserves the
-    // fold order and the lowest-id tie-break
-    val rng = new scala.util.Random(41)
-    val corpus = (10 until 400).map(i =>
-      (i.toLong, Array.fill(16)(rng.nextGaussian().toFloat))).toDF("vec_id", "embedding")
-    val queries = (0 until 6).map(i =>
-      (i.toLong, Array.fill(16)(rng.nextGaussian().toFloat))).toDF("vec_id", "embedding")
-    def run(inlineMax: Int) =
-      Similarity.ivfCosineTopK(queries, corpus, "vec_id", "embedding", 5,
-        nCells = 24, nProbe = 6, inlineMaxCells = inlineMax)
-        .select("query_id", "neighbor_id", "rank", "cos_sim")
-        .as[(Long, Long, Int, Double)].collect().toSet
-    val inlined = run(inlineMax = 64)   // 24 <= 64 → literal path
-    val refObj = run(inlineMax = 0)     // 24 > 0  → expression path
-    assert(inlined == refObj)
-    assert(inlined.nonEmpty)
-  }
-
-  test("ivfCosineTopK: tie-break to lowest centroid id matches on both forms") {
+  test("ivfCosineTopK: tie-break to lowest centroid id") {
     // colinear corpus vectors → every centroid cosine ties at 1.0; the
-    // assignment must pick the lowest centroid id on both paths
+    // assignment must pick the lowest centroid id
     val corpus = (10 until 30).map(i =>
       (i.toLong, Array(i.toFloat, 0f, 0f, 0f))).toDF("vec_id", "embedding")
     val queries = Seq((1L, Array(2f, 0f, 0f, 0f))).toDF("vec_id", "embedding")
-    def run(inlineMax: Int) =
-      Similarity.ivfCosineTopK(queries, corpus, "vec_id", "embedding", 3,
-        nCells = 4, nProbe = 1, inlineMaxCells = inlineMax)
-        .select("query_id", "neighbor_id", "rank").as[(Long, Long, Int)].collect().toSet
-    val inlined = run(64)
-    val refObj = run(0)
-    assert(inlined == refObj)
+    val out = Similarity.ivfCosineTopK(queries, corpus, "vec_id", "embedding", 3,
+        nCells = 4, nProbe = 1)
+      .select("query_id", "neighbor_id", "rank").as[(Long, Long, Int)].collect().toSet
     // all corpus rows land in cell 10 (lowest id on the all-ties argmax),
     // so probing 1 cell still sees the whole corpus: top-3 = ids 10,11,12
-    assert(inlined == Set((1L, 10L, 1), (1L, 11L, 2), (1L, 12L, 3)))
+    assert(out == Set((1L, 10L, 1), (1L, 11L, 2), (1L, 12L, 3)))
   }
 
   test("ivfCosineTopK: nCells=1024 smoke on the reference-object path") {
-    // the round-6 literal form hit a Janino/plan-size ceiling here; the
-    // reference-object form must both plan and answer at real-corpus nCells
+    // a literal-inlined centroid table hit a Janino/plan-size ceiling here;
+    // the reference-object form must both plan and answer at real-corpus nCells
     val rng = new scala.util.Random(43)
     val corpus = (0 until 1500).map(i =>
       (i.toLong, Array.fill(8)(rng.nextGaussian().toFloat))).toDF("vec_id", "embedding")
@@ -156,18 +131,16 @@ class SimilaritySpec extends AnyFunSuite {
   test("ivfCosineTopK excludes zero-norm vectors by contract") {
     // a zero-norm corpus row has undefined cosine (NaN) — it must be
     // filtered, not ranked-by-NaN (Spark sorts NaN largest; SQL engines
-    // disagree), on both assignment forms
+    // disagree)
     val corpus = Seq(
       (1L, Array(1f, 0f)), (2L, Array(0f, 0f)), (3L, Array(0.9f, 0.1f)))
       .toDF("vec_id", "embedding")
     val queries = Seq((0L, Array(1f, 0f)), (9L, Array(0f, 0f)))
       .toDF("vec_id", "embedding")
-    for (inlineMax <- Seq(64, 0)) {
-      val out = Similarity.ivfCosineTopK(queries, corpus, "vec_id", "embedding", 5,
-          nCells = 2, nProbe = 2, inlineMaxCells = inlineMax)
-        .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
-      assert(out == Set((0L, 1L), (0L, 3L))) // no zero-norm query or neighbor
-    }
+    val out = Similarity.ivfCosineTopK(queries, corpus, "vec_id", "embedding", 5,
+        nCells = 2, nProbe = 2)
+      .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
+    assert(out == Set((0L, 1L), (0L, 3L))) // no zero-norm query or neighbor
   }
 
   test("cosineNearDupPairs == brute-force cross-join pairs, exactly") {

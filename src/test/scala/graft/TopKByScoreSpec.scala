@@ -35,6 +35,23 @@ class TopKByScoreSpec extends AnyFunSuite {
     assert(agg == win)
   }
 
+  test("signed zeros tie and a null score ranks last, as in the window") {
+    // the zeros are group 1's best scores, so the -0.0/0.0 order decides
+    // rank 1: Spark's sort treats them as equal and the lower nid wins
+    val df = Seq((1L, 9003L, Some(0.0)), (1L, 9002L, Some(-0.0)),
+        (1L, 9004L, None), (1L, 5L, Some(-1.0)))
+      .toDF("qid", "nid", "cos")
+    def top(k: Int) = df.groupBy("qid")
+      .agg(TopKByScore(col("nid"), col("cos"), col("nid"), k).as("top"))
+      .select(explode(col("top"))).as[Long].collect().toSeq
+    val win = df.withColumn("rnk", row_number().over(
+        Window.partitionBy("qid").orderBy(col("cos").desc, col("nid").asc)))
+      .orderBy("rnk").select("nid").as[Long].collect().toSeq
+    assert(win == Seq(9002L, 9003L, 5L, 9004L))
+    assert(top(1) == win.take(1))
+    assert(top(4) == win)
+  }
+
   test("k larger than the group emits the whole group, ranked") {
     val df = Seq((1L, 10L, 0.5), (1L, 11L, 0.9), (1L, 12L, 0.9))
       .toDF("qid", "nid", "cos")

@@ -31,6 +31,22 @@ if [[ -n "$listeners" ]]; then
   exit 1
 fi
 
+# One top-k primitive: vector search ranks through Rankings.topKByScore
+# (the bounded TopKByScore aggregate), never a row_number window that sorts
+# the pair stream; and one arg-min aggregate, ArgMinBy.
+windows=$(grep -rnE "row_number|expressions\.Window" src/main/scala/graft/similarity/ || true)
+if [[ -n "$windows" ]]; then
+  echo "precommit: rank window in graft/similarity (use Rankings.topKByScore):" >&2
+  echo "$windows" >&2
+  exit 1
+fi
+argmin=$(grep -rn "ArgMinByLong" src || true)
+if [[ -n "$argmin" ]]; then
+  echo "precommit: ArgMinByLong is folded into ArgMinBy:" >&2
+  echo "$argmin" >&2
+  exit 1
+fi
+
 # Every `runMain graft.…` the docs name must be an object in src/main.
 missing=0
 for fq in $(grep -oh "runMain graft\.[A-Za-z0-9_.]*" README.md .claude/skills/verify/SKILL.md \
