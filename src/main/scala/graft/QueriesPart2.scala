@@ -374,16 +374,19 @@ private[graft] object QueriesPart2 {
     // (q105's engine-replayable Lloyd's), pairwise cosine INSIDE each
     // cluster only, lowest-id survivor. Near-duplicates injected the
     // q69 way so the flagged set is non-trivial; the oracle replays
-    // train → assign → pairwise → flag end-to-end.
+    // train → assign → pairwise → flag end-to-end. Each copy is generated
+    // next to its original from ONE embeddings scan (an explode, not a
+    // union of two scans), so every plan over the corpus reads it once.
     "q108_semdedup" -> ((s, d) => {
+      val v = transform(col("embedding"), _.cast("double"))
+      val orig = struct(col("vec_id"), v.as("embedding"))
+      val copy = struct((col("vec_id") + 100000).as("vec_id"),
+        concat(array(element_at(v, 1) + lit(0.05)), slice(v, 2, 63)).as("embedding"))
       val e = Tables.embeddings(s, d)
-        .select(col("vec_id"),
-          transform(col("embedding"), _.cast("double")).as("embedding"))
-      val dups = e.filter(col("vec_id") % 50 === 0)
-        .select((col("vec_id") + 100000).as("vec_id"),
-          concat(array(element_at(col("embedding"), 1) + lit(0.05)),
-            slice(col("embedding"), 2, 63)).as("embedding"))
-      graft.dedup.SemDedup.semDedup(e.unionByName(dups), "vec_id", "embedding",
+        .select(explode(when(col("vec_id") % 50 === 0, array(orig, copy))
+          .otherwise(array(orig))).as("r"))
+        .select(col("r.vec_id").as("vec_id"), col("r.embedding").as("embedding"))
+      graft.dedup.SemDedup.semDedup(e, "vec_id", "embedding",
         k = 8, trainIters = 2, threshold = 0.99)
     }),
     // ORC round-trip — the Hive-era columnar format, source-coverage twin

@@ -21,17 +21,27 @@ import org.apache.spark.sql.functions._
   * (q03/q94), replacing the paper's keep-farthest-from-centroid pick so
   * the kept set is engine-replayable.
   *
-  * Parity: clustering is [[KMeans.lloyd]] (every step oracle-replayable,
-  * q105), and the cosine is the same sequential fold the q27/q69 oracles
-  * replay bit-for-bit — so the unrounded `>= threshold` comparison is
-  * engine-exact and the oracle recomputes train → assign → pairwise →
-  * flag end-to-end in SQL.
+  * Parity: clustering is [[KMeans.lloydCentroids]] + [[KMeans.assign]]
+  * (every step oracle-replayable, q105), and the cosine is the same
+  * sequential fold the q27/q69 oracles replay bit-for-bit — so the
+  * unrounded `>= threshold` comparison is engine-exact and the oracle
+  * recomputes train → assign → pairwise → flag end-to-end in SQL.
   */
 object SemDedup {
 
   /** Annotates every embedding row with its k-means `cluster` (BIGINT)
     * and `kept` (0/1 BIGINT counting flag; 0 = semantic duplicate of a
     * lower-id same-cluster row at cosine ≥ threshold).
+    *
+    * Ids are expected to be unique. The rule compares ids, so rows that
+    * share an id never flag each other, and the result has one row per
+    * distinct (id, cluster): copies of an id that land in one cluster come
+    * out as ONE row, flagged if any copy has a lower-id near-duplicate.
+    *
+    * Plan: the assignment keeps each row's vector, so no join goes back
+    * to the corpus, and the flag is one left self-join on `cluster`
+    * followed by a (id, cluster) count that the join's cluster
+    * partitioning already satisfies.
     *
     * SIZING RULE (measured, r14 sf10 audit): the O(Σ|cluster|²) bound is
     * only sub-quadratic if `k` GROWS with the corpus — at a FIXED k the
@@ -40,33 +50,29 @@ object SemDedup {
     * 44× wall at 10× rows, sf1→sf10). Size k ≈ n / targetCellSize with
     * targetCellSize a few thousand (the paper uses k in the tens of
     * thousands at LAION scale); k×dims doubles per Lloyd round is the
-    * only driver-side state, so large k costs one wider broadcast, not a
-    * new shuffle. q108 keeps k=8 because its DuckDB oracle replays that
-    * exact k-means trace. */
+    * only driver-side state, so large k costs a larger centroid table in
+    * the assignment kernel, not a new shuffle. q108 keeps k=8 because its
+    * DuckDB oracle replays that exact k-means trace. */
   def semDedup(vecs: DataFrame, idCol: String, vecCol: String,
                k: Int, trainIters: Int, threshold: Double): DataFrame = {
-    val assigned = KMeans.lloyd(vecs, idCol, vecCol, k, trainIters)
+    val (centroids, v) = KMeans.lloydCentroids(vecs, idCol, vecCol, k, trainIters)
     // norms once per ROW (NormD), one tight-loop dot per PAIR — the
     // q27/q69 pattern: same IEEE sequence as the per-pair HOF cosine
     // (norms are per-row constants), so values are bit-unchanged while
     // the dominant per-pair cost drops to a single JVM loop.
-    val v = vecs.select(col(idCol),
-      transform(col(vecCol), _.cast("double")).as("__v"))
-    val withVec = assigned.join(v, idCol)
-      .withColumn("__n", graft.functions.NormD(col("__v")))
-    val a = withVec.select(col(idCol).as("__id_a"), col("cluster"),
-      col("__v").as("__va"), col("__n").as("__na"))
-    val b = withVec.select(col(idCol).as("__id_b"), col("cluster"),
-      col("__v").as("__vb"), col("__n").as("__nb"))
-    // Equi-join on cluster (shuffle partitioned by cluster id), id-ordered
-    // so each duplicate pair is examined once; never a cross join.
-    val dropped = a.join(b, "cluster")
-      .where(col("__id_a") < col("__id_b"))
-      .where(graft.functions.DotProductD(col("__va"), col("__vb"))
-        / (col("__na") * col("__nb")) >= threshold)
-      .select(col("__id_b").as(idCol)).distinct()
-    withVec.join(dropped.withColumn("__dup", lit(1L)), Seq(idCol), "left")
-      .withColumn("kept", col("__dup").isNull.cast("long"))
-      .select(col(idCol), col("cluster"), col("kept"))
+    val rows = KMeans.assign(v, idCol, "__v", centroids)
+      .select(col(idCol).as("__id"), col("cluster"), col("__v"),
+        graft.functions.NormD(col("__v")).as("__n"))
+    val (b, a) = (rows.as("b"), rows.as("a"))
+    // One left self-join on cluster: every row meets its lower-id
+    // near-duplicates in the same cluster, and a row with none is kept.
+    // Never a cross join.
+    b.join(a, col("a.cluster") === col("b.cluster") && col("a.__id") < col("b.__id")
+        && graft.functions.DotProductD(col("a.__v"), col("b.__v"))
+          / (col("a.__n") * col("b.__n")) >= threshold, "left")
+      .groupBy(col("b.__id"), col("b.cluster"))
+      .agg(count(col("a.__id")).as("__dups"))
+      .select(col("__id").as(idCol), col("cluster"),
+        (col("__dups") === 0L).cast("long").as("kept"))
   }
 }

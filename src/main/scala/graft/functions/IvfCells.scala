@@ -1,40 +1,40 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpectsInputTypes, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
 
-/** IVF coarse-quantizer kernels for [[graft.similarity.Similarity.ivfCosineTopK]].
+/** Nearest-centroid kernels: the IVF coarse quantizer of
+  * [[graft.similarity.Similarity.ivfCosineTopK]] (cosine) and the k-means
+  * assignment of [[graft.ml.KMeans]] (squared L2).
   *
   * The centroid matrix rides along as plain constructor data — ONE
   * reference object in the evaluated plan, O(1) plan size regardless of
-  * nCells — and each row does one tight JVM loop over it. Centroids spelled
-  * as `nCells` literal struct expressions instead form an O(nCells·dim)
-  * expression TREE: at the nCells ≈ 10³–10⁴ a 100 TB corpus needs, Janino
-  * bails out of codegen on the generated blob, and ranking probes needs an
-  * O(nCells log nCells) in-row `array_sort`. Assignment stays a pure
+  * the centroid count — and each row does one tight JVM loop over it.
+  * Centroids spelled as literal struct expressions instead form an
+  * O(k·dim) expression TREE: at the k ≈ 10³–10⁴ a 100 TB corpus needs,
+  * Janino bails out of codegen on the generated blob, and ranking probes
+  * needs an O(k log k) in-row `array_sort`. Assignment stays a pure
   * per-row map (zero shuffle over the corpus), which is why this beats the
   * obvious alternative of a broadcast-joined centroid table + arg-min
-  * aggregation: that shape explodes the corpus ×nCells and then
-  * re-aggregates it — a full corpus shuffle that the map-only form never
-  * pays.
+  * aggregation: that shape explodes the corpus ×k and then re-aggregates
+  * it — a full corpus shuffle that the map-only form never pays.
   *
   * Numeric contract (oracle parity): cosines are the same sequential
-  * left-fold dot product as [[DotProductD]] divided by (rowNorm · centNorm).
-  * Preconditions (enforced by the caller filtering zero norms, documented
-  * in Similarity): embeddings are non-null, uniform-dimension, nonzero-norm,
-  * so no NaN cosines arise and JVM `>` comparison agrees with Spark's
-  * NaN-is-largest ordering. Ties break to the LOWEST centroid id
-  * (centroids iterate in ascending-id order; replacement requires strictly
-  * greater cosine).
+  * left-fold dot product as [[DotProductD]] divided by (rowNorm · centNorm);
+  * squared distances are the sequential fold `acc + (x − y)·(x − y)` from
+  * 0.0 that DuckDB's `list_reduce` replays. Ties break to the LOWEST
+  * centroid id (centroids iterate in ascending-id order and replacement
+  * requires a strictly better score).
   */
 private[graft] object IvfKernel {
-  /** Sequential-fold dot of a row vector against centroid j; NaN-free under
-    * the preconditions. Returns NaN-safe Double.NaN only if dims mismatch
-    * (excluded by precondition; documented divergence corner). */
+  /** Sequential-fold dot of a row vector against centroid j over the two
+    * norms; NaN when the lengths differ or an element is NaN or infinite. */
   def cos(vec: ArrayData, norm: Double, cv: Array[Double], cn: Double): Double = {
     val n = vec.numElements()
     if (n != cv.length) return Double.NaN
@@ -45,6 +45,46 @@ private[graft] object IvfKernel {
       i += 1
     }
     acc / (norm * cn)
+  }
+
+  /** Index of the centroid nearest to `vec` by squared L2, ranked as Spark
+    * orders `(d, index)` structs: a null distance sorts first, NaN above
+    * every number, equal distances by index. A distance is null when the
+    * vector is null, holds a null element, or differs in length from the
+    * centroid (a ragged row), so such a row maps to the first centroid
+    * whose distance is null. */
+  def nearestL2(vec: ArrayData, cents: Array[Array[Double]]): Int = {
+    if (vec == null || anyNullElement(vec)) return 0
+    val n = vec.numElements()
+    var j = 0
+    while (j < cents.length) {
+      if (cents(j).length != n) return j
+      j += 1
+    }
+    var best = 0
+    var bestD = dist2(vec, cents(0))
+    j = 1
+    while (j < cents.length) {
+      val d = dist2(vec, cents(j))
+      // Spark's double ordering: NaN is the largest value, -0.0 == 0.0
+      if (!java.lang.Double.isNaN(d) && (java.lang.Double.isNaN(bestD) || d < bestD)) {
+        best = j
+        bestD = d
+      }
+      j += 1
+    }
+    best
+  }
+
+  private def dist2(vec: ArrayData, cv: Array[Double]): Double = {
+    var acc = 0.0
+    var i = 0
+    while (i < cv.length) {
+      val x = vec.getDouble(i) - cv(i)
+      acc += x * x
+      i += 1
+    }
+    acc
   }
 
   def anyNullElement(vec: ArrayData): Boolean = {
@@ -60,7 +100,15 @@ private[graft] object IvfKernel {
 
 /** Cell id of the nearest centroid (cosine desc, centroid-id-asc
   * tie-break) as a single map-side expression. `centIds` must be sorted
-  * ascending; `centVecs(j)`/`centNorms(j)` align with `centIds(j)`. */
+  * ascending; `centVecs(j)`/`centNorms(j)` align with `centIds(j)`.
+  *
+  * Never null: the caller keeps only rows with a positive norm (a null
+  * vector or a null element has a null [[NormD]]), and a row the kernel
+  * still cannot score — a null input, a null element, or no finite cosine
+  * (a ragged row, a NaN or infinite element) — fails the query by name.
+  * Being non-nullable is what keeps the kernel to one call per row: the
+  * `isnotnull(cell)` Spark infers from the cell equi-join folds to true
+  * instead of being pushed below the projection as a second evaluation. */
 case class NearestCentroidCell(left: Expression, right: Expression,
     centIds: Array[Long], centVecs: Array[Array[Double]],
     centNorms: Array[Double])
@@ -68,11 +116,13 @@ case class NearestCentroidCell(left: Expression, right: Expression,
   require(centIds.length == centVecs.length && centIds.length == centNorms.length,
     "centroid arrays must align")
   override def dataType: DataType = LongType
-  override def nullable: Boolean = true
+  override def nullable: Boolean = false
 
-  override def nullSafeEval(v: Any, n: Any): Any = {
-    val vec = v.asInstanceOf[ArrayData]
-    if (IvfKernel.anyNullElement(vec)) return null
+  override def eval(input: InternalRow): Any = {
+    val vec = left.eval(input).asInstanceOf[ArrayData]
+    val n = right.eval(input)
+    require(vec != null && n != null && !IvfKernel.anyNullElement(vec),
+      "nearest_centroid_cell: null vector, null element or null norm")
     val norm = n.asInstanceOf[Double]
     var best = Double.NegativeInfinity
     var bestId: Any = null
@@ -82,6 +132,8 @@ case class NearestCentroidCell(left: Expression, right: Expression,
       if (c > best) { best = c; bestId = java.lang.Long.valueOf(centIds(j)) }
       j += 1
     }
+    require(bestId != null, "nearest_centroid_cell: no cosine to rank for a " +
+      s"${vec.numElements()}-element row (ragged, NaN or infinite)")
     bestId
   }
 
@@ -102,6 +154,55 @@ object NearestCentroidCell {
     ColumnBridge.column(NearestCentroidCell(
       ColumnBridge.expression(vec), ColumnBridge.expression(norm),
       centIds, centVecs, centNorms))
+}
+
+/** Id of the nearest centroid by squared L2 — the assignment step of
+  * [[graft.ml.KMeans]] and of [[graft.ml.ProductQuantizer]]'s codebooks.
+  * It ranks exactly as `least` over `(d, cid)` structs, with `d` the
+  * sequential distance fold, would: ties to the lowest id, NaN above every
+  * number, and a null distance first, so a null vector, a null element or
+  * a ragged row maps to the LOWEST id ([[IvfKernel.nearestL2]]). Never
+  * null. `centIds` must be sorted ascending. `doGenCode` calls the static
+  * loop, so the kernel stays inside whole-stage codegen. */
+case class NearestCentroidL2(child: Expression, centIds: Array[Long],
+    centVecs: Array[Array[Double]])
+    extends UnaryExpression with ExpectsInputTypes {
+  require(centIds.nonEmpty && centIds.length == centVecs.length,
+    "centroid arrays must be non-empty and align")
+  require(centIds.indices.tail.forall(j => centIds(j - 1) < centIds(j)),
+    "centroid ids must be strictly ascending")
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(DoubleType))
+  override def dataType: DataType = LongType
+  override def nullable: Boolean = false
+
+  override def eval(input: InternalRow): Any =
+    centIds(IvfKernel.nearestL2(child.eval(input).asInstanceOf[ArrayData], centVecs))
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val v = child.genCode(ctx)
+    val ids = ctx.addReferenceObj("centIds", centIds, "long[]")
+    val vecs = ctx.addReferenceObj("centVecs", centVecs, "double[][]")
+    ev.copy(code = code"""
+      |${v.code}
+      |long ${ev.value} = $ids[graft.functions.IvfKernel.nearestL2(
+      |  ${v.isNull} ? null : ${v.value}, $vecs)];""".stripMargin, isNull = FalseLiteral)
+  }
+
+  override protected def stringArgs: Iterator[Any] =
+    Iterator(child, s"${centIds.length} centroids")
+
+  override protected def withNewChildInternal(newChild: Expression): NearestCentroidL2 =
+    copy(child = newChild)
+  override def prettyName: String = "nearest_centroid_l2"
+}
+
+object NearestCentroidL2 {
+  /** The nearest of `centroids` (id → vector, any order) to `vec`. */
+  def apply(vec: Column, centroids: Seq[(Long, Array[Double])]): Column = {
+    val sorted = centroids.sortBy(_._1).toArray
+    ColumnBridge.column(NearestCentroidL2(
+      ColumnBridge.expression(vec), sorted.map(_._1), sorted.map(_._2)))
+  }
 }
 
 /** The `nProbe` nearest cell ids (cosine desc, centroid-id-asc tie-break)

@@ -1,6 +1,7 @@
 package graft.ml
 
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.functions.NearestCentroidL2
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Distributed Lloyd's k-means over an embedding column — the canonical
@@ -8,21 +9,23 @@ import org.apache.spark.sql.functions._
   * (the q105 oracle recomputes the whole thing in SQL):
   *
   *   - deterministic init: the k lowest-id corpus vectors (q73's rule);
-  *   - assignment: min (squared-L2, centroid-id) per row, evaluated as a
-  *     pure column expression — a `least` over k literal structs whose
-  *     distance folds are sequential (`zip_with` + `aggregate` == DuckDB
+  *   - assignment: min (squared-L2, centroid-id) per row, evaluated as ONE
+  *     expression, [[NearestCentroidL2]], that carries the centroid matrix
+  *     as constructor data; its distance fold is sequential (== DuckDB
   *     `list_transform` + `list_reduce`, since 0+x == x), so comparisons
   *     are bit-identical;
   *   - update: per-dimension means ROUNDED to 6 dp — the parity seam:
   *     engine summation order differs ~1e-15 and the round collapses it
-  *     (the q53 precedent), so the next iteration's literals match the
+  *     (the q53 precedent), so the next iteration's centroids match the
   *     oracle's CTE exactly.
   *
-  * Each iteration is one |k·dims| driver collect (tiny, like the IVF
-  * centroid table) plus one map-side-combinable per-dim aggregation; the
-  * corpus is never collected and assignment never shuffles. Clusters
-  * that empty out simply drop from the centroid list (both engines see
-  * the same aggregation, so they drop consistently).
+  * Each iteration is one (cluster, pos)-keyed, map-side-combinable mean
+  * aggregation whose k·dims rows are collected and assembled into
+  * centroids on the driver (tiny, like the IVF centroid table); the corpus
+  * is never collected and assignment never shuffles. Training runs one job
+  * for the init and two per update (the aggregation's map stage and its
+  * collect). Clusters that empty out simply drop from the centroid list
+  * (both engines see the same aggregation, so they drop consistently).
   */
 object KMeans {
 
@@ -30,18 +33,7 @@ object KMeans {
   def assign(vecs: DataFrame, idCol: String, vecCol: String,
              centroids: Seq[(Long, Array[Double])]): DataFrame = {
     require(centroids.nonEmpty, "kmeans: no centroids")
-    val v = col(vecCol)
-    def dist2(c: Array[Double]): Column =
-      aggregate(
-        zip_with(v, array(c.map(lit).toIndexedSeq: _*), (x, y) => (x - y) * (x - y)),
-        lit(0.0), (a, b) => a + b)
-    val terms = centroids.toIndexedSeq.map { case (cid, cv) =>
-      struct(dist2(cv).as("d"), lit(cid).as("cid"))
-    }
-    val nearest =
-      if (terms.size == 1) terms.head.getField("cid")
-      else least(terms: _*).getField("cid")
-    vecs.withColumn("cluster", nearest)
+    vecs.withColumn("cluster", NearestCentroidL2(col(vecCol), centroids))
   }
 
   /** Per-cluster, per-dimension means rounded to 6 dp, collected (k·dims
@@ -49,18 +41,31 @@ object KMeans {
     * corpus). */
   def roundedMeans(assigned: DataFrame, vecCol: String,
                    dims: Int): Seq[(Long, Array[Double])] =
-    assigned.select(col("cluster"), posexplode(col(vecCol)))
-      .groupBy(col("cluster"), col("pos"))
-      .agg(round(avg(col("col")), 6).as("m"))
-      .groupBy(col("cluster"))
-      .agg(map_from_arrays(collect_list(col("pos")), collect_list(col("m"))).as("byPos"))
-      .collect()
-      .map { r =>
-        val cid = r.get(0) match { case l: Long => l; case i: Int => i.toLong }
-        val byPos = r.getMap[Int, Double](1)
-        cid -> Array.tabulate(dims)(i => byPos(i))
+    centroidsOf(
+      assigned.select(col("cluster"), posexplode(col(vecCol)))
+        .groupBy(col("cluster"), col("pos"))
+        .agg(round(avg(col("col")), 6).as("m"))
+        .collect().toSeq
+        .map(r => (r.getAs[Number](0).longValue, r.getInt(1), r.get(2))),
+      dims)
+
+  /** Centroids, ascending by id, from collected `(cluster, pos, mean)`
+    * rows. A dimension with no non-null value, or none at all (every
+    * vector of the cluster is shorter than `dims`), fails by name. */
+  private[ml] def centroidsOf(rows: Seq[(Long, Int, Any)],
+                              dims: Int): Seq[(Long, Array[Double])] =
+    rows.groupBy(_._1).toSeq.sortBy(_._1).map { case (cid, rs) =>
+      val byPos = rs.map(r => r._2 -> r._3).toMap
+      cid -> Array.tabulate(dims) { p =>
+        byPos.get(p) match {
+          case Some(m: Double) => m
+          case Some(_) => throw new IllegalArgumentException(
+            s"kmeans: cluster $cid has no non-null value in dimension $p")
+          case None => throw new IllegalArgumentException(
+            s"kmeans: cluster $cid has no value in dimension $p (vectors shorter than $dims)")
+        }
       }
-      .sortBy(_._1).toSeq
+    }
 
   /** Fixed-iteration Lloyd's: init from the k lowest-id vectors, then
     * `iters` rounds of assign → rounded-mean update, returning the final
@@ -74,21 +79,34 @@ object KMeans {
   /** The trained centroid table (and the double-cast vectors it was
     * trained on): `iters` rounds of assign → rounded-mean update starting
     * from the k lowest-id vectors. `iters = 2` means one update — the
-    * centroids q105's second assignment uses. */
+    * centroids q105's second assignment uses. The vector width comes from
+    * the init rows, which must share one. */
   def lloydCentroids(vecs: DataFrame, idCol: String, vecCol: String,
                      k: Int, iters: Int): (Seq[(Long, Array[Double])], DataFrame) = {
     val v = vecs.select(col(idCol), transform(col(vecCol), _.cast("double")).as("__v"))
-    val dims = v.select(size(col("__v"))).first().getInt(0)
-    var centroids: Seq[(Long, Array[Double])] = v.orderBy(idCol).limit(k).collect()
-      .map { r =>
-        val id = r.get(0) match { case l: Long => l; case i: Int => i.toLong }
-        id -> r.getSeq[Double](1).toArray
-      }.sortBy(_._1).toSeq
+    var centroids = lowestIdRows(v, idCol, k)
+    val dims = centroids.head._2.length
     var i = 1
     while (i < iters) {
       centroids = roundedMeans(assign(v, idCol, "__v", centroids), "__v", dims)
       i += 1
     }
     (centroids, v)
+  }
+
+  /** The `n` lowest-id rows of an (id, double-array) frame, collected in
+    * one job and ascending by id. No rows, a null vector among them or
+    * vectors of different widths fail by name. */
+  private[ml] def lowestIdRows(v: DataFrame, idCol: String, n: Int): Seq[(Long, Array[Double])] = {
+    val rows = v.orderBy(idCol).limit(n).collect().toSeq.map { r =>
+      val id = r.getAs[Number](0).longValue
+      require(!r.isNullAt(1), s"kmeans: vector of id $id is null")
+      id -> r.getSeq[Double](1).toArray
+    }.sortBy(_._1)
+    require(rows.nonEmpty, "kmeans: no input rows")
+    val widths = rows.map(_._2.length).distinct
+    require(widths.size == 1,
+      s"kmeans: the $n lowest-id vectors are ragged (widths ${widths.sorted.mkString(", ")})")
+    rows
   }
 }

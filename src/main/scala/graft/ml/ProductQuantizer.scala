@@ -1,6 +1,7 @@
 package graft.ml
 
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.functions.NearestCentroidL2
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Product quantization for memory-bound ANN (Jégou, Douze, Schmid,
@@ -13,25 +14,26 @@ import org.apache.spark.sql.functions._
   * Training: an independent [[KMeans]] per dimension block (the engine's
   * replayable Lloyd's — lowest-id init, 6-dp rounded means), so the whole
   * codebook derivation is oracle-replayable SQL. Codebooks are k·d/blocks
-  * doubles — driver literals, like the IVF centroid table.
+  * doubles held on the driver, like the IVF centroid table.
   *
-  * Job shape (r18, VERDICT r17 #5): ALL blocks train in ONE plan per
-  * Lloyd's iteration — init is one collect of the k lowest-id vectors
-  * (sliced per block on the driver; value-identical to a per-block
-  * orderBy+limit since slicing commutes with the row pick), and each
-  * update is one (block, cluster, pos)-keyed mean aggregation over an
-  * exploded per-block struct. The r17 form ran 2 jobs × blocks; now the
-  * driver-latency job count is constant in `blocks` (measured: q186
-  * ~13 jobs → ~5). Per-block centroid values are unchanged: the
-  * assignment expression is [[KMeans.assign]]'s verbatim, and the 6-dp
-  * round collapses any summation-order drift exactly as before.
+  * Job shape: ALL blocks train in ONE plan per Lloyd's iteration — init
+  * is one collect of the k lowest-id vectors (sliced per block on the
+  * driver; value-identical to a per-block orderBy+limit since slicing
+  * commutes with the row pick, and the source of the vector width), and
+  * each update is one (block, cluster, pos)-keyed mean aggregation over an
+  * exploded per-block struct, collected and assembled into codebooks on
+  * the driver. The job count is constant in `blocks`: q186 runs the probe
+  * lookup, the init and two jobs per update. Per-block assignment is
+  * [[KMeans.assign]]'s kernel, [[graft.functions.NearestCentroidL2]], and
+  * the 6-dp round collapses any summation-order drift exactly as in
+  * [[KMeans]].
   *
   * Encode + query plan shape: ONE projection over the corpus — nearest
-  * codeword per block is a `least` over codebook-size literal structs,
-  * and the probe's ADC term per block is a literal code→distance lookup
-  * map (the classic per-query LUT). Zero shuffle for encode and scoring;
-  * the only aggregation anywhere is the tiny per-iteration training agg
-  * and the final TakeOrdered top-k. */
+  * codeword per block is one `NearestCentroidL2` call carrying that
+  * block's codebook, and the probe's ADC term per block is a literal
+  * code→distance lookup map (the classic per-query LUT). Zero shuffle for
+  * encode and scoring; the only aggregation anywhere is the tiny
+  * per-iteration training agg and the final TakeOrdered top-k. */
 object ProductQuantizer {
 
   /** Per-block codebooks: block b covers vector dims [b·sub+1, (b+1)·sub].
@@ -39,31 +41,26 @@ object ProductQuantizer {
     * lowest-id-init cluster labels. */
   def trainCodebooks(vecs: DataFrame, idCol: String, vecCol: String,
                      blocks: Int, codebookSize: Int, iters: Int)
-      : Seq[(Int, Seq[(Long, Array[Double])])] = {
-    val v = vecs.select(col(idCol),
-      transform(col(vecCol), _.cast("double")).as("__v"))
-    val dims = v.select(size(col("__v"))).first().getInt(0)
-    trainOn(v, idCol, dims, blocks, codebookSize, iters)
-  }
+      : Seq[(Int, Seq[(Long, Array[Double])])] =
+    trainOn(doubles(vecs, idCol, vecCol), idCol, blocks, codebookSize, iters)
+
+  private def doubles(vecs: DataFrame, idCol: String, vecCol: String): DataFrame =
+    vecs.select(col(idCol), transform(col(vecCol), _.cast("double")).as("__v"))
 
   /** [[trainCodebooks]] over a pre-projected (idCol, __v double-array)
-    * frame with known dims — lets [[adcTopK]] share one dims job. */
-  private def trainOn(v: DataFrame, idCol: String, dims: Int,
+    * frame; the vector width comes from the init rows. */
+  private def trainOn(v: DataFrame, idCol: String,
                       blocks: Int, codebookSize: Int, iters: Int)
       : Seq[(Int, Seq[(Long, Array[Double])])] = {
-    require(dims % blocks == 0, s"pq: $dims dims not divisible by $blocks")
-    val sub = dims / blocks
     // init: the codebookSize lowest-id vectors, collected ONCE and sliced
     // per block on the driver (identical to per-block orderBy+limit)
-    val initRows = v.orderBy(idCol).limit(codebookSize).collect()
-      .map { r =>
-        val id = r.get(0) match { case l: Long => l; case i: Int => i.toLong }
-        id -> r.getSeq[Double](1).toArray
-      }.sortBy(_._1)
+    val initRows = KMeans.lowestIdRows(v, idCol, codebookSize)
+    val dims = initRows.head._2.length
+    require(dims % blocks == 0, s"pq: $dims dims not divisible by $blocks")
+    val sub = dims / blocks
     var centroids: IndexedSeq[Seq[(Long, Array[Double])]] =
       IndexedSeq.tabulate(blocks)(b =>
-        initRows.map { case (id, a) => id -> a.slice(b * sub, (b + 1) * sub) }
-          .toSeq)
+        initRows.map { case (id, a) => id -> a.slice(b * sub, (b + 1) * sub) })
     var i = 1
     while (i < iters) {
       // one plan updates every block: explode a per-block struct carrying
@@ -72,35 +69,19 @@ object ProductQuantizer {
       // .roundedMeans keyed by blk as well, one collect for all blocks
       val perBlock = (0 until blocks).map { b =>
         val sv = slice(col("__v"), b * sub + 1, sub)
-        val terms = centroids(b).toIndexedSeq.map { case (cid, cw) =>
-          struct(
-            aggregate(zip_with(sv, array(cw.map(lit).toIndexedSeq: _*),
-              (x, y) => (x - y) * (x - y)), lit(0.0), (a, x) => a + x).as("d"),
-            lit(cid).as("cid"))
-        }
-        val nearest =
-          if (terms.size == 1) terms.head.getField("cid")
-          else least(terms: _*).getField("cid")
-        struct(lit(b).as("blk"), nearest.as("cluster"), sv.as("bv"))
+        struct(lit(b).as("blk"), NearestCentroidL2(sv, centroids(b)).as("cluster"),
+          sv.as("bv"))
       }
-      val rows = v.select(explode(array(perBlock: _*)).as("s"))
+      val byBlock = v.select(explode(array(perBlock: _*)).as("s"))
         .select(col("s.blk").as("blk"), col("s.cluster").as("cluster"),
           posexplode(col("s.bv")))
         .groupBy(col("blk"), col("cluster"), col("pos"))
         .agg(round(avg(col("col")), 6).as("m"))
-        .groupBy(col("blk"), col("cluster"))
-        .agg(map_from_arrays(collect_list(col("pos")), collect_list(col("m")))
-          .as("byPos"))
-        .collect()
-      val next = IndexedSeq.fill(blocks)(
-        scala.collection.mutable.ArrayBuffer[(Long, Array[Double])]())
-      rows.foreach { r =>
-        val blk = r.getInt(0)
-        val cid = r.get(1) match { case l: Long => l; case n: Int => n.toLong }
-        val byPos = r.getMap[Int, Double](2)
-        next(blk) += cid -> Array.tabulate(sub)(p => byPos(p))
-      }
-      centroids = next.map(_.sortBy(_._1).toSeq)
+        .collect().toSeq
+        .groupBy(_.getInt(0))
+      centroids = IndexedSeq.tabulate(blocks)(b =>
+        KMeans.centroidsOf(byBlock.getOrElse(b, Seq.empty)
+          .map(r => (r.getLong(1), r.getInt(2), r.get(3))), sub))
       i += 1
     }
     (0 until blocks).map(b => b -> centroids(b))
@@ -114,14 +95,14 @@ object ProductQuantizer {
   def adcTopK(vecs: DataFrame, idCol: String, vecCol: String,
               blocks: Int = 4, codebookSize: Int = 16, iters: Int = 2,
               probeId: Long = 0L, topK: Int = 10): DataFrame = {
-    val v = vecs.select(col(idCol),
-      transform(col(vecCol), _.cast("double")).as("__v"))
-    val dims = v.select(size(col("__v"))).first().getInt(0)
-    val codebooks = trainOn(v, idCol, dims, blocks, codebookSize, iters)
-    val sub = dims / blocks
+    val v = doubles(vecs, idCol, vecCol)
     val probe = v.filter(col(idCol) === probeId)
       .select(col("__v")).first().getSeq[Double](0).toArray
-    // per-block: nearest codeword id (least over literal structs), then
+    val codebooks = trainOn(v, idCol, blocks, codebookSize, iters)
+    val sub = codebooks.head._2.head._2.length
+    require(probe.length == sub * blocks,
+      s"pq: probe $probeId has ${probe.length} dims, the codebooks ${sub * blocks}")
+    // per-block: nearest codeword id (one NearestCentroidL2 call), then
     // the probe-side ADC term via a literal lookup map — sequential adds
     // in ascending block order keep the sum bit-deterministic
     def dist2(a: Array[Double], b: Array[Double]): Double = {
@@ -130,15 +111,7 @@ object ProductQuantizer {
       s
     }
     val adcTerms = codebooks.map { case (b, cws) =>
-      val sv = slice(col("__v"), b * sub + 1, sub)
-      val terms = cws.toIndexedSeq.map { case (cid, cw) =>
-        struct(
-          aggregate(zip_with(sv, array(cw.map(lit).toIndexedSeq: _*),
-            (x, y) => (x - y) * (x - y)), lit(0.0), (a, x) => a + x).as("d"),
-          lit(cid).as("cid"))
-      }
-      val nearest =
-        if (terms.size == 1) terms.head.getField("cid") else least(terms: _*).getField("cid")
+      val nearest = NearestCentroidL2(slice(col("__v"), b * sub + 1, sub), cws)
       val probeBlock = probe.slice(b * sub, (b + 1) * sub)
       val lut = map(cws.flatMap { case (cid, cw) =>
         Seq(lit(cid), lit(dist2(probeBlock, cw)))

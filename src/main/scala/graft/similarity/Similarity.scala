@@ -303,9 +303,11 @@ object Similarity {
     * data distribution and probe recall is what the cell count promises.
     * Cell assignment and probe ranking use squared L2 to the trained
     * centroids (the metric k-means optimized); the final re-rank inside
-    * probed cells is cosine, same folds as [[cosineTopK]]. Assignment is
-    * a pure per-row expression over k literal centroid structs — no
-    * shuffle; the probe join shuffles on cell id only. */
+    * probed cells is cosine, same folds as [[cosineTopK]]. Corpus
+    * assignment is [[graft.ml.KMeans.assign]]'s one-expression kernel
+    * (`NearestCentroidL2`, centroids as constructor data) — no shuffle; the
+    * query side ranks its probe cells with an `array_sort` over k literal
+    * `(d, cid)` structs, and the probe join shuffles on cell id only. */
   def ivfTrainedTopK(queries: DataFrame, corpus: DataFrame,
                      idCol: String, vecCol: String, k: Int,
                      nCells: Int = 8, nProbe: Int = 3,

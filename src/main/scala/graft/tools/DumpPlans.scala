@@ -57,6 +57,7 @@ object DumpPlans {
     "q264_revenue_share" -> "share-of-parent: star joins broadcast the dims, ONE exact-cents hash agg on the fact, and the ratio windows run over the bounded 25-row nation table only",
     "q285_tpch_q20" -> "TPC-H Q20 shape decorrelated: one date+type-filtered fact scan (filters pushed), per-(part,supp) agg, correlated per-part total re-aggregated from the partials, broadcast joins between the bounded aggregates, left-semi into supplier",
     "q286_tpch_q22" -> "TPC-H Q22 shape: scalar-subquery average as a 1-row broadcast cross join, NOT EXISTS as a left-anti join on DISTINCT recent-order custkeys (date filter at the orders scan), bounded per-nation agg",
+    "q108_semdedup" -> "SemDeDup after k-means training (eager init collect + one rounded-mean aggregation per update): one embeddings scan per join side (the injected copies come from an explode, not a union), nearest_centroid_l2 carries the centroid table (one call per row, in the projection), the vectors ride along from the assignment, and one left self-join on cluster (broadcast at this size) feeds a (id, cluster) count for the kept flag",
     "q293_clustering_depth" -> "clustering-depth audit: ONE tagged-explode fact scan builds all three layouts' extents; overlap counts via a linear endpoint sweep (two running counters in one window) — no interval self-join, no manifest^2",
     "q295_qld_retrieval" -> "Dirichlet QLD retrieval: per-doc tf as codegen'd HOF filters (zero shuffle before the 1-row collection-stats agg), stats broadcast back, top-10 via TakeOrderedAndProject",
     "q298_top_paths" -> "session paths: sessionize + in-session rank windows share ONE user_id exchange; rank filter bounds the per-session collect; global top-10 via TakeOrderedAndProject",

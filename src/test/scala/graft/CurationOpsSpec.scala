@@ -105,6 +105,21 @@ class CurationOpsSpec extends AnyFunSuite {
     assert(out.forall(_._3 == 1L))
   }
 
+  test("SemDeDup on a repeated id: one row per (id, cluster), copies never flag each other") {
+    // ids 3 and 5 appear twice; the copies of 3 are identical, those of 5
+    // differ. A single cluster (k = 1) puts every copy together.
+    val df = Seq((1L, Seq(1.0, 0.0)), (3L, Seq(0.0, 1.0)), (3L, Seq(0.0, 1.0)),
+      (5L, Seq(1.0, 0.0)), (5L, Seq(1.0, 1.0)), (7L, Seq(-1.0, 1.0)))
+      .toDF("vec_id", "embedding")
+    val out = SemDedup.semDedup(df, "vec_id", "embedding",
+        k = 1, trainIters = 2, threshold = 0.9999)
+      .as[(Long, Long, Long)].collect()
+    assert(out.map(_._1).sorted.toSeq == Seq(1L, 3L, 5L, 7L), out.toSeq)
+    val kept = out.map(r => r._1 -> r._3).toMap
+    // 3's identical copies do not drop each other; 5 has a copy equal to 1
+    assert(kept == Map(1L -> 1L, 3L -> 1L, 5L -> 0L, 7L -> 1L), kept)
+  }
+
   // ---------------------------------------------- chunking / split / gate
 
   test("sliding-window chunks cover every token, stride 30, len <= 50, gap-free") {

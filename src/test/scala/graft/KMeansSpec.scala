@@ -59,4 +59,19 @@ class KMeansSpec extends AnyFunSuite {
       prev = cur
     }
   }
+
+  test("a cluster dimension with no non-null value fails by name") {
+    val df = Seq((0L, Seq[Option[Double]](Some(1.0), None)),
+      (1L, Seq[Option[Double]](Some(2.0), None))).toDF("cluster", "__v")
+    val e = intercept[IllegalArgumentException](KMeans.roundedMeans(df, "__v", 2))
+    assert(e.getMessage.contains("cluster 0 has no non-null value in dimension 1"), e.getMessage)
+  }
+
+  test("ragged initial centroids fail by name") {
+    val df = Seq((0L, Seq(1.0, 2.0)), (1L, Seq(1.0)), (2L, Seq(3.0, 4.0)))
+      .toDF("vec_id", "embedding")
+    val e = intercept[IllegalArgumentException](
+      KMeans.lloydCentroids(df, "vec_id", "embedding", k = 3, iters = 2))
+    assert(e.getMessage.contains("lowest-id vectors are ragged"), e.getMessage)
+  }
 }

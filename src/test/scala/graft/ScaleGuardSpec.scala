@@ -230,6 +230,42 @@ class ScaleGuardSpec extends AnyFunSuite {
       df.queryExecution.optimizedPlan)
   }
 
+  /** Names of the optimized-plan nodes that call the expression
+    * `prettyName`, one entry per call. */
+  private def kernelSites(df: org.apache.spark.sql.DataFrame, prettyName: String): Seq[String] =
+    df.queryExecution.optimizedPlan.collect { case n => n }.flatMap { n =>
+      val calls = n.expressions.map(_.collect { case e if e.prettyName == prettyName => e }.size).sum
+      Seq.fill(calls)(n.nodeName)
+    }
+
+  test("q73_ann_ivf: the corpus-side cell kernel runs once per row") {
+    // a nullable kernel let Spark infer isnotnull(cell) from the cell
+    // equi-join and push it below the projection, where it called the
+    // O(nCells·dim) kernel a second time per corpus row
+    val df = SparkEntry.queries("q73_ann_ivf")(spark, TestSpark.sf0001)
+    val sites = kernelSites(df, "nearest_centroid_cell")
+    assert(sites == Seq("Project"), s"nearest_centroid_cell call sites $sites:\n" +
+      df.queryExecution.optimizedPlan)
+  }
+
+  test("q108_semdedup: the k-means assignment runs once per row, never in a filter") {
+    val df = SparkEntry.queries("q108_semdedup")(spark, TestSpark.sf0001)
+    // one call on each side of the self-join, none in an inferred filter
+    val sites = kernelSites(df, "nearest_centroid_l2")
+    assert(sites == Seq("Project", "Project"), s"nearest_centroid_l2 call sites $sites:\n" +
+      df.queryExecution.optimizedPlan)
+  }
+
+  // Training jobs are the k-means init collect and two per centroid update
+  // (the mean aggregation's map stage and its collect): q105 and q108 train
+  // with one update, q186 adds its probe-vector lookup. A job that only
+  // reads the vector width, or a second aggregation per update, exceeds these.
+  for ((q, maxJobs) <- Seq("q105_kmeans" -> 3, "q108_semdedup" -> 3, "q186_pq_topk" -> 4))
+    test(s"$q: building the DataFrame runs at most $maxJobs jobs") {
+      val jobs = TestSpark.jobsDuring(SparkEntry.queries(q)(spark, TestSpark.sf0001))
+      assert(jobs <= maxJobs, s"$q ran $jobs job(s) while its DataFrame was built")
+    }
+
   // Building a single-table query is driver work only: the table read takes
   // its schema from one footer (Tables.parquetSchema), so no inference job
   // runs, and none of these queries runs an eager job while it is built.

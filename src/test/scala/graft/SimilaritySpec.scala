@@ -143,6 +143,18 @@ class SimilaritySpec extends AnyFunSuite {
     assert(out == Set((0L, 1L), (0L, 3L))) // no zero-norm query or neighbor
   }
 
+  test("ivfCosineTopK fails by name on a corpus row it cannot score") {
+    // a NaN element passes the positive-norm filter (Spark ranks NaN above
+    // 0) but has no cosine to any centroid: fail, never drop the row
+    val corpus = Seq((1L, Array(1f, 0f)), (2L, Array(0f, 1f)), (3L, Array(Float.NaN, 1f)))
+      .toDF("vec_id", "embedding")
+    val queries = Seq((0L, Array(1f, 0f))).toDF("vec_id", "embedding")
+    val e = intercept[Exception](Similarity.ivfCosineTopK(queries, corpus, "vec_id",
+      "embedding", 5, nCells = 2, nProbe = 2).collect())
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("nearest_centroid_cell: no cosine to rank")), e)
+  }
+
   test("cosineNearDupPairs == brute-force cross-join pairs, exactly") {
     // random corpus + planted near-dups; grid blocking must lose nothing
     val rng = new scala.util.Random(7)

@@ -47,6 +47,15 @@ if [[ -n "$argmin" ]]; then
   exit 1
 fi
 
+# One assignment kernel: k-means and product-quantizer codebooks assign
+# rows with NearestCentroidL2, never a least() over literal zip_with folds.
+folds=$(grep -rn "zip_with" src/main/scala/graft/ml/ || true)
+if [[ -n "$folds" ]]; then
+  echo "precommit: zip_with in graft/ml (assign through NearestCentroidL2):" >&2
+  echo "$folds" >&2
+  exit 1
+fi
+
 # Every `runMain graft.…` the docs name must be an object in src/main.
 missing=0
 for fq in $(grep -oh "runMain graft\.[A-Za-z0-9_.]*" README.md .claude/skills/verify/SKILL.md \
