@@ -32,6 +32,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // Optimizer rule: rescue min_by-over-struct from SortAggregate (see
     // graft.rules.RewriteMinByStruct scaladoc).
     e.injectOptimizerRule(_ => graft.rules.RewriteMinByStruct)
+    // The ordered exclusive scan of graft.operators.PrefixSum: its physical
+    // exec, and the rule that drops a scan whose columns nobody reads.
+    e.injectPlannerStrategy(_ => graft.operators.PrefixSumStrategy)
+    e.injectOptimizerRule(_ => graft.operators.PrunePrefixSum)
     e.injectFunction((
       new FunctionIdentifier("title_case"),
       new ExpressionInfo(classOf[TitleCase].getName, "title_case"),

@@ -26,7 +26,7 @@ private[graft] object QueriesPart2 {
   val queries: Map[String, Q] = Map[String, Q](
     // Sequence packing (concat-and-chop) for LLM pretraining: each doc's
     // global token offset and 2048-token training-sequence id, via the
-    // two-phase distributed prefix sum in SequencePack — the global cumsum
+    // distributed prefix sum in SequencePack (PrefixSum) — the global cumsum
     // WITHOUT the single-partition window the naive `sum() over (ORDER BY)`
     // plans (the oracle runs exactly that naive form; same integers).
     "q84_pack_sequences" -> ((s, d) =>
@@ -400,8 +400,7 @@ private[graft] object QueriesPart2 {
       graft.io.Orc.read(s, dir, docs.schema).select(docs.columns.map(col): _*)
     }),
     // Deterministic per-epoch training shuffle: md5(seed ‖ id) order key,
-    // global rank via the two-phase decomposition (256 parallel bucket
-    // windows + one O(256) offset window) — no rand(), no single-
+    // global rank via PrefixSum's read-once scan — no rand(), no single-
     // partition corpus-wide window.
     "q110_training_shuffle" -> ((s, d) =>
       graft.operators.TrainingShuffle.shuffleRank(
@@ -727,9 +726,8 @@ private[graft] object QueriesPart2 {
     // Tie-corrected (mid-rank) Mann-Whitney AUC of `value` as a score for
     // the click label. Every term is an exact multiple of 0.5 below 2^52,
     // so all sums are IEEE-exact and ORDER-INDEPENDENT — bit parity with
-    // no rounding seam. The only ordered scan is the two-phase exclusive
-    // prefix sum over the DISTINCT-value table (GlobalRank — no global
-    // row window).
+    // no rounding seam. The only ordered scan is the exclusive prefix sum
+    // over the DISTINCT-value table (GlobalRank — no global row window).
     "q134_auc" -> ((s, d) => {
       val sc = ev(s, d).select(col("value"),
         when(col("event_type") === "click", 1L).otherwise(0L).as("lab"))
@@ -867,8 +865,8 @@ private[graft] object QueriesPart2 {
   )
 
   val oracle: Map[String, String] = Map(
-    // The naive single-window global cumsum — the semantics the two-phase
-    // prefix sum must reproduce integer-for-integer.
+    // The naive single-window global cumsum — the semantics the
+    // distributed prefix sum must reproduce integer-for-integer.
     "q84_pack_sequences" ->
       """WITH d AS (
         | SELECT doc_id,
@@ -1391,7 +1389,7 @@ private[graft] object QueriesPart2 {
     // ORIGINAL table, so the oracle is simply the original.
     "q109_orc_roundtrip" ->
       "SELECT doc_id, text, lang, source, n_chars FROM documents",
-    // The naive single-window global rank the two-phase form must equal;
+    // The naive single-window global rank the distributed form must equal;
     // md5 hex is lowercase in both engines, ASCII compare, id tiebreak.
     "q110_training_shuffle" ->
       """SELECT doc_id,
@@ -1783,7 +1781,7 @@ private[graft] object QueriesPart2 {
         |SELECT node, round(pr, 6) AS pr FROM pr2""".stripMargin,
     // Mid-rank Mann-Whitney replay; the oracle may use the naive ordered
     // window over distinct values (it has no scale constraint) — the
-    // engine's two-phase prefix sum computes the identical cum_before.
+    // engine's distributed prefix sum computes the identical cum_before.
     "q134_auc" ->
       """WITH s AS (
         | SELECT value, CASE WHEN event_type = 'click' THEN 1 ELSE 0 END AS lab

@@ -4,7 +4,7 @@ import graft.dedup.Dedup
 import graft.functions.Lambert93
 import graft.ml.Models
 import graft.multimodal.Multimodal
-import graft.operators.{Cleaning, Impute, Rankings}
+import graft.operators.{Cleaning, Impute, PrefixSum, Rankings}
 import graft.similarity.Similarity
 import graft.stats.Stats
 import graft.streaming.EventsStream
@@ -182,7 +182,7 @@ private[graft] object QueriesPart3 {
     }),
     // Two-sample Kolmogorov–Smirnov: D = max |ECDF_click − ECDF_view|
     // over the shared distinct-value table. Cumulative counts come from
-    // ONE multi-weight two-phase prefix sum (GlobalRank — no corpus-wide
+    // ONE multi-weight distributed prefix sum (GlobalRank — no corpus-wide
     // window); the ECDFs are integer-ratio divisions, so every derived
     // double is bit-deterministic cross-engine: NO rounding seam at all.
     // argmax is the ≤-smallest value attaining D (TakeOrdered, k=1).
@@ -348,7 +348,7 @@ private[graft] object QueriesPart3 {
     // weight reaches the target fraction — revenue-weighted quantity
     // quantiles, the "what quantity does half the MONEY sit below" shape.
     // Weights aggregate per distinct value (one hash agg), then ONE
-    // two-phase prefix sum orders them (GlobalRank — no corpus-wide
+    // distributed prefix sum orders them (GlobalRank — no corpus-wide
     // window); all three threshold probes are conditional min-aggregates
     // in ONE pass over the cumulated table (r18). Weights are cent-exact
     // integers (×100) so the comparison has no float seam.
@@ -658,7 +658,8 @@ private[graft] object QueriesPart3 {
     // -inf, so the zero case must never reach ln. The windowed relation
     // is bounded by DISTINCT durations (≤ the span of days in the data,
     // the W3 tiny-result shape), so the global window is not a scale
-    // risk; the per-user span agg is the one real shuffle.
+    // risk; the at-risk count is PrefixSum's exclusive sum, and the
+    // per-user span agg is the one real shuffle.
     "q166_kaplan_meier" -> ((s, d) => {
       val spans = ev(s, d).groupBy(col("user_id"))
         .agg(datediff(max(col("ts")), min(col("ts"))).cast("long").as("t"))
@@ -666,10 +667,9 @@ private[graft] object QueriesPart3 {
       val tot = dt.agg(sum(col("d")).as("__n"))
       val w = Window.orderBy(col("t").asc)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val wp = Window.orderBy(col("t").asc)
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val base = dt.crossJoin(broadcast(tot))
-        .withColumn("n_risk", col("__n") - coalesce(sum(col("d")).over(wp), lit(0L)))
+      val base = PrefixSum(dt, Seq(col("t")), PrefixSum.Sum(col("d"), "__before"))
+        .crossJoin(broadcast(tot))
+        .withColumn("n_risk", col("__n") - col("__before"))
       base
         .withColumn("__dead", max(when(col("d") === col("n_risk"), 1L)
           .otherwise(0L)).over(w))
@@ -1196,7 +1196,7 @@ private[graft] object QueriesPart3 {
         | (SELECT count(*) FROM e) AS n_edges,
         | (SELECT count(*) FROM w) AS n_wedges,
         | (SELECT count(*) FROM t) AS n_triangles""".stripMargin,
-    // The naive single-window ECDF replay; the two-phase prefix sums must
+    // The naive single-window ECDF replay; the distributed prefix sums must
     // reproduce it bit-for-bit (integer-ratio doubles, no rounding).
     "q148_ks_test" ->
       """WITH g AS (

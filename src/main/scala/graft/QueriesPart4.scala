@@ -4,7 +4,7 @@ import graft.dedup.Dedup
 import graft.functions.Lambert93
 import graft.ml.Models
 import graft.multimodal.Multimodal
-import graft.operators.{Cleaning, Impute, Rankings}
+import graft.operators.{Cleaning, Impute, PrefixSum, Rankings}
 import graft.similarity.Similarity
 import graft.stats.Stats
 import graft.streaming.EventsStream
@@ -165,8 +165,8 @@ private[graft] object QueriesPart4 {
       graft.text.BigramLm.perDocCrossEntropy(doc(s, d), "text", "doc_id")),
     // Token-balanced output sharding: snake-pack every doc into 8 shards
     // by token count so per-shard TOKEN totals are equal-cost training
-    // files. Global rank via the two-phase bucket device (never a corpus
-    // window) — see operators/Sharding. Output is the per-shard manifest
+    // files. Global rank via PrefixSum (never a corpus window) — see
+    // operators/Sharding. Output is the per-shard manifest
     // the writer would fan out on.
     "q193_balanced_shards" -> ((s, d) =>
       graft.operators.Sharding.snakeShards(doc(s, d), "doc_id",
@@ -751,10 +751,9 @@ private[graft] object QueriesPart4 {
     // delivery every real transport has — the standard watermark-testing
     // device — and the audit then measures, per event_type, how many
     // events a 10-min watermark would drop and by how much. The running
-    // max-timestamp over ARRIVAL order is the two-phase prefix-MAX (the
-    // SequencePack device with an associative max instead of sum:
-    // arrival-value-range buckets, per-bucket parallel windows, one
-    // O(buckets) offset window) — never a stream-wide ordered window.
+    // max-timestamp over ARRIVAL order is PrefixSum's exclusive running
+    // max (one range exchange on arrival, one sorted map pass) — never a
+    // stream-wide ordered window.
     // All exact integer micros.
     "q216_lateness_audit" -> ((s, d) => {
       val horizonUs = 600000000L
@@ -763,23 +762,9 @@ private[graft] object QueriesPart4 {
         .withColumn("arr", col("tsu") +
           (conv(substring(md5(concat(lit("arr_"), col("event_id"))), 1, 8),
             16, 10).cast("long") % 3600000000L) - 1800000000L)
-      val ext = ev.agg(min(col("arr")).as("__mn"), max(col("arr")).as("__mx"))
-      val b = ev.crossJoin(broadcast(ext))
-        .withColumn("__bucket",
-          expr("(arr - __mn) DIV (((__mx - __mn) DIV 32) + 1)"))
-      val wLocal = Window.partitionBy("__bucket")
-        .orderBy(col("arr"), col("event_id"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val local = b.withColumn("__lmax", max(col("tsu")).over(wLocal))
-      val wB = Window.orderBy("__bucket")
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val offs = local.groupBy("__bucket").agg(max(col("tsu")).as("__bmax"))
-        .withColumn("__pmax", max(col("__bmax")).over(wB))
-        .select(col("__bucket"), col("__pmax"))
-      val run = local.join(broadcast(offs), Seq("__bucket"))
-        .withColumn("__runmax",
-          greatest(coalesce(col("__lmax"), lit(Long.MinValue)),
-            coalesce(col("__pmax"), lit(Long.MinValue))))
+      val run = PrefixSum(ev, Seq(col("arr"), col("event_id")),
+          PrefixSum.Max(col("tsu"), "__pmax"))
+        .withColumn("__runmax", coalesce(col("__pmax"), lit(Long.MinValue)))
         .withColumn("__late",
           col("__runmax") =!= lit(Long.MinValue) &&
             col("tsu") < col("__runmax") - lit(horizonUs))
@@ -825,9 +810,8 @@ private[graft] object QueriesPart4 {
     // classic entity-resolution alternative to LSH: one global sort on
     // a normalized key, then compare only rows within a fixed window
     // w=10. The global rank is computed WITHOUT a corpus-wide window:
-    // per-bucket row_number (bucket = first key char, order-aligned
-    // with the sort key by construction) + a broadcast prefix-sum of
-    // bucket counts — the q216 two-phase device. The candidate join is
+    // PrefixSum's exclusive row count over (key nulls first, doc_id),
+    // one range exchange and one sorted map pass. The candidate join is
     // banded on rank DIV w (a pair within w spans at most two adjacent
     // bands), so it is an equi-join, never a range cross-product.
     // Verifier = the codegen'd JaroWinkler expression (DuckDB parity
@@ -837,17 +821,11 @@ private[graft] object QueriesPart4 {
       val k = doc(s, d).select(col("doc_id"),
         substring(regexp_replace(lower(col("text")), "[^a-z]", ""), 1, 40)
           .as("nk"))
-      val b = k.withColumn("bk", coalesce(substring(col("nk"), 1, 1), lit("")))
-      val local = b.withColumn("lrn", row_number().over(
-        Window.partitionBy("bk").orderBy(col("nk"), col("doc_id"))))
-      val offs = local.groupBy("bk").agg(count(lit(1)).as("__c"))
-        .withColumn("__off", coalesce(sum(col("__c")).over(
-          Window.orderBy("bk")
-            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-        .select(col("bk"), col("__off"))
-      val r = local.join(broadcast(offs), Seq("bk"))
-        .select(col("doc_id"), col("nk"),
-          (col("__off") + col("lrn")).as("rn"))
+      // (nk is not null, nk or "") orders exactly as nk ASC NULLS FIRST,
+      // without a null key for PrefixSum to drop
+      val r = PrefixSum(k, Seq(col("nk").isNotNull, coalesce(col("nk"), lit("")),
+          col("doc_id")), PrefixSum.count("__before"))
+        .select(col("doc_id"), col("nk"), (col("__before") + 1L).as("rn"))
       val left = r.select(col("doc_id").as("doc_a"), col("nk").as("ka"),
           col("rn").as("ra"))
         .withColumn("band",
@@ -926,7 +904,7 @@ private[graft] object QueriesPart4 {
     // calibration step ahead of q123-style pruning). No corpus-wide
     // window anywhere: the within-source rank decomposes into a
     // per-(source, value) row_number plus a per-source prefix-sum over
-    // the DISTINCT-VALUE histogram (two-phase device, value-keyed), and
+    // the DISTINCT-VALUE histogram (partitioned by source), and
     // the global quantile lookup is a range join against the bounded
     // global cumulative histogram. Rank arithmetic is exact integers;
     // the one float expression ((rank−0.5)/n·N, then ceil) has identical
@@ -1238,7 +1216,7 @@ private[graft] object QueriesPart4 {
         | coalesce(round(CAST(-s6 AS DOUBLE) / 1000000 / n_bigrams, 4), 0.0)
         |   AS h
         |FROM documents d LEFT JOIN pd USING (doc_id)""".stripMargin,
-    // The engine's two-phase bucketed rank ≡ one global row_number here;
+    // The engine's distributed rank ≡ one global row_number here;
     // snake CASE replayed verbatim.
     "q193_balanced_shards" ->
       """WITH d AS (
@@ -1255,7 +1233,7 @@ private[graft] object QueriesPart4 {
         |SELECT shard, CAST(count(*) AS BIGINT) AS n_docs,
         | CAST(sum(w) AS BIGINT) AS total_tokens
         |FROM sh GROUP BY shard""".stripMargin,
-    // Count table then rank — same two-phase shape as the engine; binary
+    // Count table then rank — same shape as the engine; binary
     // string order on ascii grams is collation-safe in both engines.
     "q194_wimbd_topk" ->
       """WITH t AS (
@@ -1925,7 +1903,7 @@ private[graft] object QueriesPart4 {
         |ORDER BY rrf DESC, doc_id LIMIT 10""".stripMargin,
     // Same md5 arrival jitter; the naive stream-wide ordered window IS
     // fine oracle-side — the engine computes the identical running max
-    // with the two-phase device.
+    // with PrefixSum.
     "q216_lateness_audit" ->
       """WITH ev AS (
         | SELECT event_id, event_type, epoch_us(ts) AS tsu,

@@ -4,7 +4,7 @@ import graft.dedup.Dedup
 import graft.functions.Lambert93
 import graft.ml.Models
 import graft.multimodal.Multimodal
-import graft.operators.{Cleaning, Impute, Rankings}
+import graft.operators.{Cleaning, Impute, PrefixSum, Rankings}
 import graft.similarity.Similarity
 import graft.stats.Stats
 import graft.streaming.EventsStream
@@ -639,17 +639,16 @@ private[graft] object QueriesPart5 {
     // Token-budget data selection — "give me the best B tokens": greedy
     // by (token count desc, doc_id) until the budget fills. The greedy
     // prefix decomposes into exact VALUE-level cumulative sums (tokens
-    // is a bounded integer) + a per-value running sum — the two-phase
-    // device keyed by score value, so no corpus-wide window exists and
+    // is a bounded integer) + a per-value running sum — PrefixSum keyed
+    // by score value, so no corpus-wide window exists and
     // the cut is reproducible at any scale. Reported per source.
     "q247_token_budget" -> ((s, d) => {
       val budget = 25000L
       val docs = doc(s, d).select(col("doc_id"), col("source"),
         size(split(col("text"), " ")).cast("long").as("toks"))
       val perVal = docs.groupBy("toks").agg(sum(col("toks")).as("__vt"))
-      val offs = perVal.withColumn("__before", coalesce(
-          sum(col("__vt")).over(Window.orderBy(col("toks").desc)
-            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
+      val offs = PrefixSum(perVal, Seq(col("toks").desc),
+          PrefixSum.Sum(col("__vt"), "__before"))
         .select(col("toks"), col("__before"))
       val ranked = docs.withColumn("__run", sum(col("toks")).over(
           Window.partitionBy("toks").orderBy("doc_id")
@@ -842,7 +841,7 @@ private[graft] object QueriesPart5 {
     // (sorted batching is the standard padding-waste fix; this measures
     // what it buys on THIS corpus). Batching runs per source — the
     // shard-level sort a packing job does anyway; a global variant would
-    // use q193's two-phase rank. All token counts exact longs; the one
+    // use q193's PrefixSum rank. All token counts exact longs; the one
     // ratio divides exact ints.
     "q255_padding_efficiency" -> ((s, d) => {
       val docs = doc(s, d).select(col("doc_id"), col("source"),
@@ -1880,7 +1879,7 @@ private[graft] object QueriesPart5 {
         |   AS waste_rate
         |FROM b GROUP BY 1, 2""".stripMargin,
     // the window prefix sum here is the oracle's shortcut; the Spark side
-    // uses the two-phase decomposition — values identical by design. All
+    // uses PrefixSum's distributed scan — values identical by design. All
     // integer arithmetic, mirrored clamp for clamp.
     "q256_systematic_pps" ->
       """WITH w AS (

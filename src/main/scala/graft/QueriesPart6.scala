@@ -4,7 +4,7 @@ import graft.dedup.Dedup
 import graft.functions.Lambert93
 import graft.ml.Models
 import graft.multimodal.Multimodal
-import graft.operators.{Cleaning, Impute, Rankings}
+import graft.operators.{Cleaning, Impute, PrefixSum, Rankings}
 import graft.similarity.Similarity
 import graft.stats.Stats
 import graft.streaming.EventsStream
@@ -395,12 +395,9 @@ private[graft] object QueriesPart6 {
       val src = docs.groupBy("source").agg(
         count(lit(1)).as("n_docs"), sum(col("toks")).as("tokens"),
         sum(col("__q_micro")).as("__qsum"))
-      val w = Window.orderBy(
-        (col("__qsum").cast("double") / col("n_docs")).desc, col("source"))
-      src
-        .withColumn("quality_rank", row_number().over(w))
-        .withColumn("__before", coalesce(sum(col("tokens")).over(
-          w.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
+      PrefixSum(src, Seq((col("__qsum").cast("double") / col("n_docs")).desc,
+          col("source")), PrefixSum.count("__rank0"), PrefixSum.Sum(col("tokens"), "__before"))
+        .withColumn("quality_rank", col("__rank0") + 1L)
         .withColumn("take_tokens",
           greatest(lit(0L), least(col("tokens"), lit(budget) - col("__before"))))
         .select(col("source"), col("quality_rank").cast("long").as("quality_rank"),
@@ -472,7 +469,7 @@ private[graft] object QueriesPart6 {
       // into ONE final task (measured: 2.4 s single-task sort of 600k
       // doubles at sf0.1 — and a driver-killer buffer at corpus scale,
       // l_extendedprice is ~97% distinct so the counts map IS the data).
-      // Equivalent scale-safe shape: value-count table + the two-phase
+      // Equivalent scale-safe shape: value-count table + the distributed
       // exclusive prefix sum (GlobalRank), then each boundary value is
       // picked by its index and interpolated with ARITHMETIC IDENTICAL to
       // Percentile.getPercentile — position = (N−1)·p, lower/higher =
@@ -577,8 +574,7 @@ private[graft] object QueriesPart6 {
     // cheaper parts AND size = max size at its own price (an equal-size
     // cheaper part dominates; equal on both axes → both survive). The
     // "max among strictly cheaper" is GlobalRank.exclusivePrefixMax —
-    // the shared two-phase device (per-bucket windows + an O(buckets)
-    // offset pass), never a corpus-wide ordered window. All compares
+    // PrefixSum's read-once scan, never a corpus-wide ordered window. All compares
     // exact (size int; prices identical doubles).
     "q281_pareto_frontier" -> ((s, d) => {
       val p = Tables.part(s, d).select(col("p_partkey"), col("p_name"),
@@ -586,7 +582,7 @@ private[graft] object QueriesPart6 {
       val perPrice = p.groupBy("p_retailprice")
         .agg(max(col("p_size")).as("__mx"))
       val cheaperMax = graft.operators.GlobalRank.exclusivePrefixMax(
-          perPrice, "p_retailprice", "__mx", nBuckets = 32)
+          perPrice, "p_retailprice", "__mx")
         .select(col("p_retailprice"), col("__mx"),
           coalesce(col("max_before"), lit(Long.MinValue)).as("__cm"))
       p.join(cheaperMax, "p_retailprice")
@@ -1613,7 +1609,7 @@ private[graft] object QueriesPart6 {
         |    AND l.l_shipdate > o.o_orderdate + INTERVAL 30 DAY)
         |GROUP BY 1""".stripMargin,
     // the oracle's single ordered window IS the semantics; the Spark side
-    // computes the same running max with the two-phase bucket device.
+    // computes the same running max with PrefixSum.
     "q281_pareto_frontier" ->
       """WITH p AS (
         | SELECT p_partkey, p_name, p_retailprice,

@@ -4,7 +4,7 @@ import graft.dedup.Dedup
 import graft.functions.Lambert93
 import graft.ml.Models
 import graft.multimodal.Multimodal
-import graft.operators.{Cleaning, Impute, Rankings}
+import graft.operators.{Cleaning, Impute, PrefixSum, Rankings}
 import graft.similarity.Similarity
 import graft.stats.Stats
 import graft.streaming.EventsStream
@@ -530,9 +530,9 @@ private[graft] object QueriesPart7 {
     // sample strictly below v, pairs where v is the LARGER side
     // contribute mult·(v·cnt_lt − sum_lt), and summing that over
     // distinct values counts every pair exactly once (ties contribute
-    // 0). GlobalRank's two-phase prefix sums keep the order distributed
-    // (q148's device), so the whole test is one hash agg + bucketed
-    // windows + a 1-row agg — O(n log n). Values ride cents so every
+    // 0). GlobalRank's prefix sums keep the order distributed
+    // (q148's device), so the whole test is one hash agg + one range-
+    // partitioned scan + a 1-row agg — O(n log n). Values ride cents so every
     // pairwise term is exact integer; sums accumulate in decimal(38,0)
     // (BIGINT saturates near 10⁹ rows × 10⁵ cents); the final division
     // is the only float op, rounded 6dp.
@@ -577,8 +577,7 @@ private[graft] object QueriesPart7 {
     // observed). At each distinct time the observed cohort-A deaths
     // face the hypergeometric expectation d·n1/n with variance
     // d·n1/n·n2/n·(n−d)/(n−1); at-risk counts fall out of exclusive
-    // prefix sums over the distinct-day table (bounded by the fixture's
-    // day span, so the unpartitioned window is O(days), q166's shape).
+    // prefix sums (PrefixSum) over the distinct-day table.
     // χ² = (Σ(o−e))²/Σv. Integer counts throughout; the per-time
     // divisions are the only float ops, rounded 4dp after the final
     // 1-row sums.
@@ -590,11 +589,11 @@ private[graft] object QueriesPart7 {
         sum(when(col("g") === 0, 1L).otherwise(0L)).as("d1"),
         sum(when(col("g") === 1, 1L).otherwise(0L)).as("d2"))
       val tot = dt.agg(sum(col("d1")).as("__N1"), sum(col("d2")).as("__N2"))
-      val wp = Window.orderBy(col("t").asc)
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val base = dt.crossJoin(broadcast(tot))
-        .withColumn("n1", col("__N1") - coalesce(sum(col("d1")).over(wp), lit(0L)))
-        .withColumn("n2", col("__N2") - coalesce(sum(col("d2")).over(wp), lit(0L)))
+      val base = PrefixSum(dt, Seq(col("t")), PrefixSum.Sum(col("d1"), "__b1"),
+          PrefixSum.Sum(col("d2"), "__b2"))
+        .crossJoin(broadcast(tot))
+        .withColumn("n1", col("__N1") - col("__b1"))
+        .withColumn("n2", col("__N2") - col("__b2"))
         .withColumn("n", col("n1") + col("n2"))
         .withColumn("dd", col("d1") + col("d2"))
         .filter(col("n") > 1) // n=1 terms contribute 0 to o−e, v undefined
@@ -1117,7 +1116,7 @@ private[graft] object QueriesPart7 {
     // ROC AUC of `value` as a purchase discriminator — the rank-sum
     // (Mann–Whitney) identity AUC = (2R₊ − n₊(n₊+1)) / (2n₊n₋) with
     // midrank tie handling, over cents-exact scores. Reuses q325's
-    // doubled-midrank device on the distributed two-phase prefix sum —
+    // doubled-midrank device on the distributed prefix sum —
     // NO global sort, no corpus-wide window; everything is exact
     // integers (decimal accumulators — rank sums square past long at
     // corpus scale) until one final division.

@@ -133,8 +133,8 @@ private[graft] object QueriesPart8 {
     // coverage?" primitive (Vovk; Angelopoulos & Bates 2021). Model =
     // per-event-type cents mean on the reference half; nonconformity =
     // |residual| on the calibration half; q̂ = the ⌈0.9(n+1)⌉-th order
-    // statistic — an EXACT integer-rank selection over the two-phase
-    // prefix device (no global sort), k in pure integer arithmetic.
+    // statistic — an EXACT integer-rank selection over PrefixSum's
+    // exclusive scan (no corpus-wide window), k in pure integer arithmetic.
     // Scores are rounded 6 dp before grouping so both engines select
     // from identical keys.
     "q340_conformal_interval" -> ((s, d) => {
@@ -723,7 +723,7 @@ private[graft] object QueriesPart8 {
     // groups, tie-corrected): does `value` distribute identically across
     // event types? Global average ranks ride q334's exact device —
     // 2·rank(c) = 2·cum_before + t + 1 over the DISTINCT-score relation
-    // (GlobalRank's two-phase prefix sum, never a corpus-wide window) —
+    // (GlobalRank's prefix sum on PrefixSum, never a corpus-wide window) —
     // so the per-group rank sums are exact integers (DECIMAL: at 1e12
     // rows 2R ~ N² overflows int64). The only float work is Σ R²/n over
     // the k-row group relation, folded in sorted group order so both

@@ -60,9 +60,14 @@ object SemDedup {
     // q27/q69 pattern: same IEEE sequence as the per-pair HOF cosine
     // (norms are per-row constants), so values are bit-unchanged while
     // the dominant per-pair cost drops to a single JVM loop.
+    // A nullable norm lets Spark infer isnotnull(__n) from the join
+    // condition and push it below this projection, which would compute
+    // norm_d a second time per row. A norm that would be null (a null
+    // vector or element) is NaN instead: the dot over that vector is null
+    // too, so the cosine stays null and still matches nothing.
     val rows = KMeans.assign(v, idCol, "__v", centroids)
       .select(col(idCol).as("__id"), col("cluster"), col("__v"),
-        graft.functions.NormD(col("__v")).as("__n"))
+        coalesce(graft.functions.NormD(col("__v")), lit(Double.NaN)).as("__n"))
     val (b, a) = (rows.as("b"), rows.as("a"))
     // One left self-join on cluster: every row meets its lower-id
     // near-duplicates in the same cluster, and a row with none is kept.

@@ -3,6 +3,7 @@ package graft.ml
 import graft.functions.NearestCentroidL2
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType}
 
 /** Distributed Lloyd's k-means over an embedding column — the canonical
   * iterative algorithm on Spark, built so every step is ENGINE-REPLAYABLE
@@ -83,7 +84,7 @@ object KMeans {
     * the init rows, which must share one. */
   def lloydCentroids(vecs: DataFrame, idCol: String, vecCol: String,
                      k: Int, iters: Int): (Seq[(Long, Array[Double])], DataFrame) = {
-    val v = vecs.select(col(idCol), transform(col(vecCol), _.cast("double")).as("__v"))
+    val v = doubleVectors(vecs, idCol, vecCol)
     var centroids = lowestIdRows(v, idCol, k)
     val dims = centroids.head._2.length
     var i = 1
@@ -92,6 +93,17 @@ object KMeans {
       i += 1
     }
     (centroids, v)
+  }
+
+  /** (idCol, __v): the vectors as a double array, cast element-wise only
+    * when they are not one already (an identity `transform` would copy
+    * every array). */
+  private[ml] def doubleVectors(vecs: DataFrame, idCol: String, vecCol: String): DataFrame = {
+    val v = vecs.schema(vecCol).dataType match {
+      case ArrayType(DoubleType, _) => col(vecCol)
+      case _ => transform(col(vecCol), _.cast("double"))
+    }
+    vecs.select(col(idCol), v.as("__v"))
   }
 
   /** The `n` lowest-id rows of an (id, double-array) frame, collected in

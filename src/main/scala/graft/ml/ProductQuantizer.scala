@@ -42,10 +42,7 @@ object ProductQuantizer {
   def trainCodebooks(vecs: DataFrame, idCol: String, vecCol: String,
                      blocks: Int, codebookSize: Int, iters: Int)
       : Seq[(Int, Seq[(Long, Array[Double])])] =
-    trainOn(doubles(vecs, idCol, vecCol), idCol, blocks, codebookSize, iters)
-
-  private def doubles(vecs: DataFrame, idCol: String, vecCol: String): DataFrame =
-    vecs.select(col(idCol), transform(col(vecCol), _.cast("double")).as("__v"))
+    trainOn(KMeans.doubleVectors(vecs, idCol, vecCol), idCol, blocks, codebookSize, iters)
 
   /** [[trainCodebooks]] over a pre-projected (idCol, __v double-array)
     * frame; the vector width comes from the init rows. */
@@ -95,7 +92,7 @@ object ProductQuantizer {
   def adcTopK(vecs: DataFrame, idCol: String, vecCol: String,
               blocks: Int = 4, codebookSize: Int = 16, iters: Int = 2,
               probeId: Long = 0L, topK: Int = 10): DataFrame = {
-    val v = doubles(vecs, idCol, vecCol)
+    val v = KMeans.doubleVectors(vecs, idCol, vecCol)
     val probe = v.filter(col(idCol) === probeId)
       .select(col("__v")).first().getSeq[Double](0).toArray
     val codebooks = trainOn(v, idCol, blocks, codebookSize, iters)

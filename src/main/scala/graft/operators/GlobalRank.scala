@@ -1,113 +1,37 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Scale-safe global ordered prefix sums — the generalization of the
-  * SequencePack two-phase pattern (there: token offsets by id; here: any
-  * numeric order column, any weight).
-  *
-  * A naive `sum(w) OVER (ORDER BY v)` is a SINGLE-partition window over
-  * the whole relation — the q84 scale cliff. This operator keeps the
-  * computation distributed with the standard two-phase decomposition:
-  *
-  *   1. rows land in `nBuckets` contiguous VALUE-RANGE buckets (equal-width
-  *      over [min, max], bounds from one tiny agg on a broadcast 1-row
-  *      cross join — no sampling, no sort);
-  *   2. each bucket computes its internal exclusive running sum in
-  *      parallel (per-bucket window);
-  *   3. bucket totals (nBuckets rows) get their own exclusive running sum
-  *      — the only single-partition window, over nBuckets rows, O(1) in
-  *      the relation size — and rejoin as offsets.
-  *
-  * Equal-width buckets skew with the value distribution (unlike
-  * SequencePack's id ranges); skewed inputs want quantile cutpoints from
-  * the A2 exact-percentile agg instead — the decomposition is unchanged.
-  * The result is EXACTLY the global ordered prefix sum whatever the
-  * bucketing, so bucket boundaries never leak into the semantics. */
+/** Global ordered prefix sums and running maxima over one numeric order
+  * column, on [[PrefixSum]]'s read-once scan: a naive
+  * `sum(w) OVER (ORDER BY v)` is a SINGLE-partition window over the whole
+  * relation — the q84 scale cliff — while PrefixSum keeps every row in its
+  * range partition. A row whose order value is NULL is dropped (PrefixSum's
+  * null contract). */
 object GlobalRank {
 
   /** Adds `cum_before` = Σ weight over rows STRICTLY before this row in
     * `orderCol`-ascending order. `orderCol` must be unique per row (use a
     * distinct-value table; ties would make "before" ambiguous). */
-  def exclusivePrefixSum(df: DataFrame, orderCol: String, weightCol: String,
-                         nBuckets: Int = 64): DataFrame =
-    exclusivePrefixSums(df, orderCol, Seq(weightCol), nBuckets)
+  def exclusivePrefixSum(df: DataFrame, orderCol: String, weightCol: String): DataFrame =
+    exclusivePrefixSums(df, orderCol, Seq(weightCol))
       .withColumnRenamed(s"cum_before_$weightCol", "cum_before")
 
-  /** Exclusive running MAX over the global `orderCol` order — the same
-    * two-phase decomposition with max in place of sum (any associative,
-    * commutative aggregate fits the shape). Adds `max_before` = max of
-    * `valueCol` over rows STRICTLY before this row; NULL for the global
-    * first row. `orderCol` must be unique per row (pre-group ties away,
-    * as [[exclusivePrefixSum]] requires). Powers the q281 Pareto
-    * frontier; q216's inline copy predates this helper. */
-  def exclusivePrefixMax(df: DataFrame, orderCol: String, valueCol: String,
-                         nBuckets: Int = 64): DataFrame = {
-    // internal temp names carry a __gpm_ prefix so caller columns (which
-    // often use the house __mn/__mx convention themselves) can't collide
-    val b = df.agg(min(col(orderCol)).as("__gpm_mn"),
-      max(col(orderCol)).as("__gpm_mx"))
-    val bucketed = df.crossJoin(broadcast(b))
-      .withColumn("__bkt",
-        when(col("__gpm_mx") === col("__gpm_mn"), lit(0L)).otherwise(
-          least(lit(nBuckets - 1L), floor(
-            (col(orderCol) - col("__gpm_mn")) /
-              ((col("__gpm_mx") - col("__gpm_mn")) / nBuckets)).cast("long"))))
-      .drop("__gpm_mn", "__gpm_mx")
-    val wLocal = Window.partitionBy("__bkt").orderBy(col(orderCol).asc)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val local = bucketed.withColumn("__loc", max(col(valueCol)).over(wLocal))
-    val offs = bucketed.groupBy("__bkt").agg(max(col(valueCol)).as("__bm"))
-      .withColumn("__off", max(col("__bm")).over(
-        Window.orderBy(col("__bkt").asc)
-          .rowsBetween(Window.unboundedPreceding, -1)))
-      .select(col("__bkt"), col("__off"))
-    // greatest() returns the largest NON-NULL operand (null only when
-    // both are), which is exactly the empty-prefix semantics wanted
-    local.join(broadcast(offs), Seq("__bkt"))
-      .withColumn("max_before", greatest(col("__loc"), col("__off")))
-      .drop("__bkt", "__loc", "__off")
-  }
+  /** Exclusive running MAX over the global `orderCol` order: adds
+    * `max_before` = max of `valueCol` over rows STRICTLY before this row;
+    * NULL for the global first row. `orderCol` must be unique per row
+    * (pre-group ties away, as [[exclusivePrefixSum]] requires). Powers the
+    * q281 Pareto frontier. */
+  def exclusivePrefixMax(df: DataFrame, orderCol: String, valueCol: String): DataFrame =
+    PrefixSum(df, Seq(col(orderCol)), PrefixSum.Max(col(valueCol), "max_before"))
 
-  /** Multi-weight form: one bucketing + one per-bucket window + ONE
-    * nBuckets-row offset window carry ALL the weights at once (each extra
-    * weight is one more aggregate in the same shuffles, not a second
-    * pass). Adds `cum_before_<w>` per weight column — the shape ECDF-style
-    * consumers need (e.g. the two-sample KS statistic: both samples'
-    * cumulative counts over one shared value order). */
+  /** Multi-weight form: one scan carries ALL the weights at once. Adds
+    * `cum_before_<w>` per weight column — the shape ECDF-style consumers
+    * need (e.g. the two-sample KS statistic: both samples' cumulative
+    * counts over one shared value order). */
   def exclusivePrefixSums(df: DataFrame, orderCol: String,
-                          weightCols: Seq[String],
-                          nBuckets: Int = 64): DataFrame = {
-    val b = df.agg(min(col(orderCol)).as("__mn"), max(col(orderCol)).as("__mx"))
-    val bucketed = df.crossJoin(broadcast(b))
-      .withColumn("__bkt",
-        when(col("__mx") === col("__mn"), lit(0L)).otherwise(
-          least(lit(nBuckets - 1L), floor(
-            (col(orderCol) - col("__mn")) /
-              ((col("__mx") - col("__mn")) / nBuckets)).cast("long"))))
-      .drop("__mn", "__mx")
-    val wLocal = Window.partitionBy("__bkt").orderBy(col(orderCol).asc)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val local = weightCols.foldLeft(bucketed) { (acc, w) =>
-      acc.withColumn(s"__cum_local_$w",
-        coalesce(sum(col(w)).over(wLocal), lit(0L)))
-    }
-    val wOff = Window.orderBy(col("__bkt").asc)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val totAggs = weightCols.map(w => sum(col(w)).as(s"__tot_$w"))
-    val offsets = weightCols.foldLeft(
-      bucketed.groupBy("__bkt").agg(totAggs.head, totAggs.tail: _*)) {
-      (acc, w) =>
-        acc.withColumn(s"__off_$w",
-          coalesce(sum(col(s"__tot_$w")).over(wOff), lit(0L)))
-    }.select(col("__bkt") +: weightCols.map(w => col(s"__off_$w")): _*)
-    val joined = local.join(broadcast(offsets), Seq("__bkt"))
-    weightCols.foldLeft(joined) { (acc, w) =>
-      acc.withColumn(s"cum_before_$w",
-        col(s"__off_$w") + col(s"__cum_local_$w"))
-        .drop(s"__cum_local_$w", s"__off_$w")
-    }.drop("__bkt")
-  }
+                          weightCols: Seq[String]): DataFrame =
+    PrefixSum(df, Seq(col(orderCol)),
+      weightCols.map(w => PrefixSum.Sum(col(w), s"cum_before_$w")): _*)
 }

@@ -26,21 +26,20 @@ import org.apache.spark.sql.functions._
   * W/n is taken multiple times (`copies` > 1) — that IS PPS semantics;
   * Σ copies = n exactly (the n probe points partition among intervals).
   *
-  * Scale shape: the global prefix sum is [[GlobalRank]]'s two-phase
-  * decomposition (no corpus-wide window), the total is a 1-row broadcast,
-  * and the probe-count formula is a pure per-row expression — one keyed
-  * shuffle end to end. */
+  * Scale shape: the global prefix sum is [[GlobalRank]]'s read-once scan
+  * (no corpus-wide window), the total is a 1-row broadcast, and the
+  * probe-count formula is a pure per-row expression. */
 object Sampling {
 
   /** Rows selected by systematic PPS with their exact multiplicity.
     * Output: idCol, weight (long), copies (long ≥ 1); Σ copies = n.
     * Zero/negative-weight rows are excluded (they occupy no interval). */
   def systematicPps(df: DataFrame, idCol: String, weightCol: String,
-                    n: Long, nBuckets: Int = 64): DataFrame = {
+                    n: Long): DataFrame = {
     require(n >= 1, s"sample size must be >= 1: $n")
     val w = df.select(col(idCol), col(weightCol).cast("long").as("weight"))
       .filter(col("weight") > 0)
-    val cum = GlobalRank.exclusivePrefixSum(w, idCol, "weight", nBuckets)
+    val cum = GlobalRank.exclusivePrefixSum(w, idCol, "weight")
     val tot = cum.agg(sum(col("weight")).as("__W"))
     cum.crossJoin(broadcast(tot))
       .withColumn("__lo", lit(2L) * n * col("cum_before"))

@@ -1,7 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, functions => F}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Weight-balanced output sharding — the write-side planner for a 100 TB
@@ -13,39 +12,20 @@ import org.apache.spark.sql.functions._
   * provably balances totals to within one max-item weight per round.
   *
   * The global rank is NOT a corpus-wide `row_number() over (order by …)`
-  * (single-partition cliff). It is the two-phase device of
-  * [[graft.text.SequencePack]], re-keyed by VALUE instead of id:
-  *   1. deterministic contiguous weight-range buckets, largest weights in
-  *      bucket 0 (divide-first formula — no sampling, no overflow);
-  *   2. per-bucket `row_number` ordered (weight desc, id asc) — parallel;
-  *   3. bucket COUNTS (nBuckets rows) get the only single-partition
-  *      window, broadcast back as rank offsets.
-  * Skewed weight distributions only skew bucket WIDTH; correctness never
-  * depends on the bucketing, only parallelism does.
+  * (single-partition cliff): it is [[PrefixSum]]'s exclusive row count + 1
+  * over (weight desc, id asc), one range exchange and one sorted map pass.
   */
 object Sharding {
 
   /** Returns (idCol, weight, rank, shard): `rank` is the 1-based global
-    * rank by (weight desc, id asc); `shard` ∈ [0, nShards). */
+    * rank by (weight desc, id asc); `shard` ∈ [0, nShards). A row with a
+    * null id or weight is dropped (PrefixSum's null contract). */
   def snakeShards(df: DataFrame, idCol: String, weight: Column,
-                  nShards: Int, nBuckets: Int = 32): DataFrame = {
-    require(nShards > 0 && nBuckets > 0)
+                  nShards: Int): DataFrame = {
+    require(nShards > 0)
     val d = df.select(col(idCol), weight.cast("long").as("__w"))
-    val ext = d.agg(min(col("__w")).as("__mn"), max(col("__w")).as("__mx"))
-    // bucket 0 = heaviest range; divide-first so (mx−w) never multiplies.
-    val bucketed = d.crossJoin(F.broadcast(ext))
-      .withColumn("__bucket",
-        expr(s"(__mx - __w) DIV (((__mx - __mn) DIV $nBuckets) + 1)"))
-    val wLocal = Window.partitionBy("__bucket")
-      .orderBy(col("__w").desc, col(idCol).asc)
-    val local = bucketed.withColumn("__lr", row_number().over(wLocal))
-    val wB = Window.orderBy("__bucket")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offs = local.groupBy("__bucket").agg(count(lit(1)).as("__bc"))
-      .withColumn("__off", coalesce(sum(col("__bc")).over(wB), lit(0L)))
-      .select(col("__bucket"), col("__off"))
-    local.join(F.broadcast(offs), "__bucket")
-      .withColumn("rank", col("__off") + col("__lr"))
+    PrefixSum(d, Seq(col("__w").desc, col(idCol).asc), PrefixSum.count("__before"))
+      .withColumn("rank", col("__before") + 1L)
       .withColumn("shard", expr(
         s"""CASE WHEN ((rank - 1) DIV $nShards) % 2 = 0
            | THEN (rank - 1) % $nShards

@@ -1,7 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, functions => F}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Deterministic global training-order shuffle: every row gets a dense
@@ -16,18 +15,10 @@ import org.apache.spark.sql.functions._
   * yields an independent permutation while staying bit-reproducible
   * across runs, engines, and task retries.
   *
-  * The rank is the same two-phase decomposition as
-  * [[graft.text.SequencePack]]'s prefix sum, specialised to counting:
-  *
-  *   1. rows bucket by the key's first two hex digits — 256 contiguous
-  *      key ranges, uniform by construction (md5 output is uniform), so
-  *      no sampling pass (unlike repartitionByRange) and no skew;
-  *   2. per-bucket `row_number()` — windows partitioned BY bucket, all
-  *      256 in parallel;
-  *   3. bucket counts (256 rows) get the only global running sum —
-  *      O(buckets), not O(corpus) — and broadcast back as offsets.
-  *
-  * global rank = bucket offset + local rank. A trainer then reads
+  * The rank is [[PrefixSum]]'s exclusive row count + 1 over (key, id):
+  * one range exchange on the key (md5 output is uniform, so the sampled
+  * ranges are balanced), per-partition counts from that same shuffle, one
+  * sorted map pass. A trainer then reads
   * `ORDER BY shuffle_rank` ranges, or writes the corpus back partitioned
   * by `shuffle_rank DIV rows_per_shard` for sequential shard reads.
   */
@@ -40,20 +31,11 @@ object TrainingShuffle {
   /** Adds `shuffle_rank` (BIGINT, 1-based, dense) ordering `df` by
     * md5(seed ‖ idCol). Ties are impossible for distinct ids (equal md5
     * would need equal input strings) but idCol breaks them anyway so the
-    * order is total even under id reuse. */
-  def shuffleRank(df: DataFrame, idCol: String, seed: String): DataFrame = {
-    val keyed = df.withColumn("__key", shuffleKey(col(idCol), seed))
-      .withColumn("__bucket", substring(col("__key"), 1, 2))
-    val wLocal = Window.partitionBy("__bucket").orderBy(col("__key"), col(idCol))
-    val local = keyed.withColumn("__local", row_number().over(wLocal).cast("long"))
-    // The only global window: one running sum over ≤256 bucket-count rows.
-    val wBuckets = Window.orderBy("__bucket")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = local.groupBy("__bucket").agg(count(lit(1)).as("__n"))
-      .withColumn("__offset", coalesce(sum(col("__n")).over(wBuckets), lit(0L)))
-      .select(col("__bucket"), col("__offset"))
-    local.join(F.broadcast(offsets), "__bucket")
-      .withColumn("shuffle_rank", col("__offset") + col("__local"))
-      .drop("__key", "__bucket", "__local", "__offset")
-  }
+    * order is total even under id reuse. A null id has a null key and is
+    * dropped (PrefixSum's null contract). */
+  def shuffleRank(df: DataFrame, idCol: String, seed: String): DataFrame =
+    PrefixSum(df.withColumn("__key", shuffleKey(col(idCol), seed)),
+        Seq(col("__key"), col(idCol)), PrefixSum.count("__before"))
+      .withColumn("shuffle_rank", col("__before") + 1L)
+      .drop("__key", "__before")
 }

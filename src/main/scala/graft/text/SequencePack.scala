@@ -1,7 +1,7 @@
 package graft.text
 
-import org.apache.spark.sql.{DataFrame, functions => F}
-import org.apache.spark.sql.expressions.Window
+import graft.operators.PrefixSum
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Sequence packing for LLM pretraining: concatenate the corpus token
@@ -11,51 +11,22 @@ import org.apache.spark.sql.functions._
   *
   * The interesting part at scale is the GLOBAL cumulative sum: the naive
   * `sum() over (ORDER BY doc_id)` window forces every row through ONE
-  * partition — the classic scale cliff. This implements the textbook
-  * two-phase distributed prefix sum instead:
-  *
-  *   1. rows are assigned to `nBuckets` contiguous, DETERMINISTIC id
-  *      ranges (bucket = id·n DIV (maxId+1) — no sampling, unlike
-  *      repartitionByRange, so results are reproducible and oracle-able);
-  *   2. a per-bucket running sum (window partitioned BY bucket — parallel);
-  *   3. bucket totals (nBuckets rows) get their own running sum — the only
-  *      single-partition window, over O(buckets) rows, not O(corpus) —
-  *      and broadcast back as per-bucket offsets.
-  *
-  * global_cumsum = bucket_offset + local_cumsum. Exact integer arithmetic
-  * throughout. Size nBuckets to the cluster's parallelism; skewed id
-  * spacing only skews bucket WIDTH, and each bucket is itself windowed in
-  * parallel per key, so the worst case degrades toward the single-window
-  * form rather than failing.
+  * partition — the classic scale cliff. [[graft.operators.PrefixSum]] keeps
+  * it distributed: one range exchange on the id, per-partition token
+  * totals read from that same shuffle, then one sorted map pass. Exact
+  * integer arithmetic throughout.
   */
 object SequencePack {
 
   /** Returns (idCol, n_tokens, start_offset, seq_id) — one row per input
-    * row. `tokensCol` must be a BIGINT token count column expression.
-    * Ids must be non-negative longs (any id up to Long.MaxValue is safe:
-    * the bucket formula divides first, so nothing can overflow). */
+    * row with a non-null id. `tokensCol` must be a BIGINT token count
+    * column expression; a null count adds no tokens and gets a null
+    * offset. */
   def packOffsets(docs: DataFrame, idCol: String, tokens: org.apache.spark.sql.Column,
-                  budget: Long, nBuckets: Int = 32): DataFrame = {
+                  budget: Long): DataFrame = {
     val d = docs.select(col(idCol), tokens.cast("long").as("n_tokens"))
-    val mx = d.agg(max(col(idCol)).as("__mx"))
-    // id DIV width with width = (maxId DIV n) + 1: same contiguous-range
-    // bucketing as id·n DIV (maxId+1) but with no multiplication, so ids
-    // near Long.MaxValue can't wrap (id*n overflows for id > MaxValue/n).
-    val bucketed = d.crossJoin(F.broadcast(mx))
-      .withColumn("__bucket",
-        expr(s"$idCol DIV ((__mx DIV $nBuckets) + 1)"))
-    val wLocal = Window.partitionBy("__bucket").orderBy(idCol)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val withLocal = bucketed
-      .withColumn("__local_cum", sum(col("n_tokens")).over(wLocal))
-    val wBuckets = Window.orderBy("__bucket")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = withLocal.groupBy("__bucket")
-      .agg(sum(col("n_tokens")).as("__btotal"))
-      .withColumn("__boffset", coalesce(sum(col("__btotal")).over(wBuckets), lit(0L)))
-      .select(col("__bucket"), col("__boffset"))
-    withLocal.join(F.broadcast(offsets), "__bucket")
-      .withColumn("start_offset", col("__boffset") + col("__local_cum") - col("n_tokens"))
+    PrefixSum(d, Seq(col(idCol)), PrefixSum.Sum(col("n_tokens"), "__before"))
+      .withColumn("start_offset", when(col("n_tokens").isNotNull, col("__before")))
       .withColumn("seq_id", expr(s"start_offset DIV $budget"))
       .select(col(idCol), col("n_tokens"), col("start_offset"), col("seq_id"))
   }
@@ -72,14 +43,14 @@ object SequencePack {
     * `concat(slice for seq)(doc_tokens[slice_start : slice_start+len])`
     * reconstructs the packed stream byte-for-byte.
     *
-    * Built on [[packOffsets]] (two-phase distributed prefix sum — no
+    * Built on [[packOffsets]] (distributed prefix sum — no
     * single-partition window), then a per-row `explode(sequence(...))`
     * over the handful of sequences each document spans: pure codegen'd
     * column arithmetic, output size = input + one extra row per boundary
     * crossing, no shuffle beyond packOffsets' own. */
   def packSlices(docs: DataFrame, idCol: String, tokens: org.apache.spark.sql.Column,
-                 budget: Long, nBuckets: Int = 32): DataFrame =
-    packOffsets(docs, idCol, tokens, budget, nBuckets)
+                 budget: Long): DataFrame =
+    packOffsets(docs, idCol, tokens, budget)
       .where(col("n_tokens") > 0)
       .withColumn("seq_id", explode(expr(
         s"sequence(start_offset DIV $budget, (start_offset + n_tokens - 1) DIV $budget)")))

@@ -33,27 +33,27 @@ object DumpPlans {
     "q69_cosine_neardup" -> "exact cosine near-dup: grid-cell equi-join (no cross join), per-row norms, tight-loop dot verify",
     "q73_ann_ivf" -> "IVF-flat ANN: centroid table carried by nearest_centroid_cell / top_probe_cells (O(1) plan size in nCells), shuffle-free cell assignment (pure projection), probe-cell equi-join, top-k in ObjectHashAggregate (top_k_by, map-side partials)",
     "q80_partition_prune" -> "date-partitioned layout: PartitionFilters prune whole day-directories at planning time (3 of 30 read); filter never touches file contents",
-    "q85_pack_slices" -> "two-phase prefix sum: per-bucket parallel window, the only unpartitioned window is over O(buckets) offset rows, then codegen'd explode over each doc's spanned sequences",
+    "q85_pack_slices" -> "token offsets from one PrefixSum: a range exchange on doc_id, per-partition totals read from that shuffle, one sorted map pass (no unpartitioned window), then codegen'd explode over each doc's spanned sequences",
     "q87_asof_nearest" -> "both as-of directions from ONE exchange+sort: a single Window operator computes the backward carry (preceding frame) and forward carry (following frame) over the same ordering",
     "q98_heavy_hitters" -> "SpaceSaving in ObjectHashAggregate (partial_space_saving_topk map-side, k counters per partition shuffle), then broadcast candidate recount",
-    "q100_pipeline_e2e" -> "the composed curation pipeline as one lazy plan: scan -> codegen'd normalize/quality -> keep-first dedup window on md5(text) (NO BroadcastExchange on the corpus side) -> quota window -> bucketed prefix-sum packing",
+    "q100_pipeline_e2e" -> "the composed curation pipeline as one lazy plan: scan -> codegen'd normalize/quality -> keep-first dedup window on md5(text) (NO BroadcastExchange on the corpus side) -> quota window -> PrefixSum packing over one range exchange (documents scanned once)",
     "q107_decontaminate" -> "decontamination: eval grams reduced to a broadcast distinct set — corpus side is a map-side hash semi-join, zero corpus-text shuffle",
-    "q110_training_shuffle" -> "deterministic shuffle rank: 256 parallel per-bucket windows; the only SinglePartition exchange carries the O(256) bucket-offset rows, broadcast back",
+    "q110_training_shuffle" -> "deterministic shuffle rank: PrefixSum's exclusive count over (md5 key, id) on one range exchange; no SinglePartition exchange, no broadcast",
     "q137_retention" -> "retention cohorts: first-week via min-over-window on the user_id shuffle (NO BroadcastExchange on the per-user side), then one hash agg",
     "q177_weighted_reservoir" -> "A-ES weighted reservoir: per-source rank filter plans as WindowGroupLimit (partial per-partition top-k heaps before the source shuffle, no full sort)",
-    "q148_ks_test" -> "two-sample KS: BOTH cumulative counts ride one multi-weight two-phase prefix sum (per-bucket windows + an O(buckets) offset window) — no corpus-wide window, no second pass",
+    "q148_ks_test" -> "two-sample KS: BOTH cumulative counts ride one multi-weight PrefixSum over one range exchange — no corpus-wide window, no second pass",
     "q149_bloom_join" -> "runtime bloom pre-filter: bloom_build partials merge map-side (ObjectHashAggregate), the 1 KB bitset is inlined as a literal, and the fact scan's Filter applies the probe BEFORE the exchange — the shuffle carries only probable matches",
-    "q193_balanced_shards" -> "token-balanced sharding: global rank by weight via VALUE-range buckets — per-bucket parallel windows, the only SinglePartition window is the O(buckets) offset table, broadcast back; snake shard is pure projection",
+    "q193_balanced_shards" -> "token-balanced sharding: global rank by (weight desc, id) from one PrefixSum over a range exchange — no SinglePartition window, no broadcast; snake shard is pure projection",
     "q196_hits" -> "HITS power iteration: ONE src-partitioned edge checkpoint (dedup rides its repartition exchange-free); hub half-steps read it via a byte-gated auth BROADCAST so the groupBy(src) agg needs no exchange; max-normalizers are 1-row broadcast cross joins",
     "q200_link_prediction" -> "common-neighbor wedges: apex-cap left-semi prunes hub apexes BEFORE the self-join; exact-count hash agg; degree joins after the minCommon filter shrink the pair stream first",
-    "q218_sorted_neighborhood" -> "sorted-neighborhood ER: global rank = per-first-char-bucket windows + broadcast prefix-sum (no corpus-wide window); candidate pairs via rank-DIV-w band equi-join (no range cross-product); codegen'd JaroWinkler verify",
+    "q218_sorted_neighborhood" -> "sorted-neighborhood ER: global rank = PrefixSum's exclusive count over (key, doc_id) on one range exchange (no corpus-wide window); candidate pairs via rank-DIV-w band equi-join (no range cross-product); codegen'd JaroWinkler verify",
     "q221_quantile_normalize" -> "cross-source quantile normalization: within-source rank = per-(source, value) window + distinct-value prefix sums; the global lookup is a broadcast range join against the bounded cumulative histogram",
     "q224_knn_eval" -> "LOO kNN eval: norms computed once per vector (projection), tight-loop dot kernels in the 4M-pair cross join, per-query rank window on the bounded eval set",
     "q231_attribution" -> "first/last-touch attribution: hour-band + user equi-join (purchase probes two bands), min/max(struct) argmin/argmax in one hash agg, left join restores clickless purchases",
     "q239_merkle_audit" -> "Merkle digest: one hash agg per level (256 buckets, then root), sort inside the digest — partition-order-free, no corpus sort",
     "q251_small_qty_revenue" -> "TPC-H Q17 shape decorrelated: brand filter pushed to the part scan, the per-part threshold agg runs over the brand-restricted join (not the full fact), both joins broadcast the bounded side",
     "q253_referential_audit" -> "FK orphan checks: DISTINCT parent keys then left join — bounded dims broadcast by size stats WITHOUT hints; corpus-cardinality parents (orders/customer) shuffle-join, exactly as they must at scale",
-    "q256_systematic_pps" -> "systematic PPS: GlobalRank two-phase prefix sum (per-bucket windows + O(buckets) offset broadcast), 1-row total cross join, then the probe-count formula as pure projection — one keyed shuffle end to end",
+    "q256_systematic_pps" -> "systematic PPS: GlobalRank prefix sum on one PrefixSum range exchange, 1-row total cross join, then the probe-count formula as pure projection",
     "q264_revenue_share" -> "share-of-parent: star joins broadcast the dims, ONE exact-cents hash agg on the fact, and the ratio windows run over the bounded 25-row nation table only",
     "q285_tpch_q20" -> "TPC-H Q20 shape decorrelated: one date+type-filtered fact scan (filters pushed), per-(part,supp) agg, correlated per-part total re-aggregated from the partials, broadcast joins between the bounded aggregates, left-semi into supplier",
     "q286_tpch_q22" -> "TPC-H Q22 shape: scalar-subquery average as a 1-row broadcast cross join, NOT EXISTS as a left-anti join on DISTINCT recent-order custkeys (date filter at the orders scan), bounded per-nation agg",

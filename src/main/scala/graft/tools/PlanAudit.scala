@@ -56,8 +56,8 @@ object PlanAudit {
     *
     * GlobalWindow = unpartitioned window operators; each funnels its
     * whole input through a single partition — fine when the windowed
-    * relation is bounded by construction (the O(buckets) offset windows
-    * of every two-phase prefix sum, ≤25-row dimension relations), fatal
+    * relation is bounded by construction (≤25-row dimension relations,
+    * distinct-value tables), fatal
     * on a corpus. */
   private def hazardCounts(plan: org.apache.spark.sql.execution.SparkPlan)
       : Seq[(String, Int)] = {
@@ -136,12 +136,11 @@ object PlanAudit {
         |## Triage of accepted hits (r13)
         |
         |- **GlobalWindow** — every unpartitioned window in the surface is a
-        |  bounded-relation device: the O(buckets) offset row of a two-phase
-        |  prefix sum (q110/q148/q193-style — the corpus flows through
-        |  per-bucket windows, only the ≤256-row offset table is global), a
-        |  post-limit rank (q116 ranks 256 TakeOrdered survivors), a
-        |  distinct-value cumulative relation (q166's day-span durations,
-        |  q134/q362's dollar score blocks), or a config sweep. Spot-checked
+        |  bounded-relation device: a post-limit rank (q116 ranks 256
+        |  TakeOrdered survivors), a distinct-value cumulative relation
+        |  (q166's day-span durations), or a config sweep. Global prefix
+        |  sums and ranks run on PrefixSum (one range exchange), which is
+        |  not a window and is not counted here. Spot-checked
         |  r13 (q116, q166, q110, q122, q134); each site's scaladoc states
         |  its bound. A NEW query adding a global window shows up in the
         |  table above and must document its bound or fix the partition.

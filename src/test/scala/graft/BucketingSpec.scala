@@ -1,5 +1,6 @@
 package graft
 
+import graft.TestSpark.withConf
 import graft.io.Bucketing
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -7,16 +8,6 @@ import org.scalatest.funsuite.AnyFunSuite
 class BucketingSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  private def withConf(kvs: (String, String)*)(body: => Unit): Unit = {
-    val old = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally old.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
-    }
-  }
 
   test("bucketed co-located join: no shuffle exchange, results intact") {
     val li = Tables.lineitem(spark, TestSpark.sf0001)

@@ -75,7 +75,7 @@ class CorpusShardStatsSpec extends AnyFunSuite {
 
   test("snake shards: uneven count, few buckets — offsets still rank globally") {
     val df = (1L to 10L).map(i => (i, 11L - i)).toDF("id", "w")
-    val r = Sharding.snakeShards(df, "id", col("w"), nShards = 4, nBuckets = 3)
+    val r = Sharding.snakeShards(df, "id", col("w"), nShards = 4)
     val ranks = r.orderBy("id").select("rank").as[Long].collect()
     assert(ranks.toSeq == (1L to 10L)) // weight desc == id asc here
     val sums = r.groupBy("shard").agg(sum("weight").as("tw"))
@@ -85,7 +85,7 @@ class CorpusShardStatsSpec extends AnyFunSuite {
 
   test("snake shards: duplicate weights break ties by id, ranks stay dense") {
     val df = Seq((1L, 5L), (2L, 5L), (3L, 5L), (4L, 1L)).toDF("id", "w")
-    val r = Sharding.snakeShards(df, "id", col("w"), nShards = 2, nBuckets = 2)
+    val r = Sharding.snakeShards(df, "id", col("w"), nShards = 2)
     val byId = r.orderBy("id").select("rank").as[Long].collect()
     assert(byId.toSeq == Seq(1L, 2L, 3L, 4L))
   }

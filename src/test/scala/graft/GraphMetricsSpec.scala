@@ -87,7 +87,7 @@ class GraphMetricsSpec extends AnyFunSuite {
     val rows = (1 to 2000).map(_ => rng.nextDouble() * 100)
       .distinct.map(v => (v, 1L + rng.nextInt(5)))
     val df = rows.toDF("v", "w")
-    val got = GlobalRank.exclusivePrefixSum(df, "v", "w", nBuckets = 16)
+    val got = GlobalRank.exclusivePrefixSum(df, "v", "w")
       .select("v", "cum_before").as[(Double, Long)].collect().toMap
     val naive = df.withColumn("cb", coalesce(sum(col("w")).over(
         Window.orderBy(col("v").asc)

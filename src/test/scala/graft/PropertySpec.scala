@@ -261,7 +261,7 @@ class PropertySpec extends AnyFunSuite {
           .toDF("doc_id", "text")
         val B = 7L
         val rows = SequencePack.packSlices(df, "doc_id",
-            graft.text.Text.tokenCount(col("text")), budget = B, nBuckets = 4)
+            graft.text.Text.tokenCount(col("text")), budget = B)
           .as[(Long, Long, Long, Long)].collect().toSeq
         val total = docs.map(_._2.toLong).sum
         // per-sequence token sums: exactly B except the last
@@ -299,6 +299,76 @@ class PropertySpec extends AnyFunSuite {
         .as[(Long, Long)].collect().toMap
       assert(got == naive)
     }
+  }
+
+  /** PrefixSum's sum/count/max columns against the naive single-partition
+    * offset window over the non-null-key rows, as sorted row strings. */
+  private def prefixSumVsWindow(df: org.apache.spark.sql.DataFrame,
+                                order: Seq[org.apache.spark.sql.Column],
+                                keys: Seq[String]): (Seq[String], Seq[String]) = {
+    import org.apache.spark.sql.expressions.Window
+    import graft.operators.PrefixSum
+    val got = PrefixSum(df, order, PrefixSum.Sum(col("w"), "s"), PrefixSum.count("c"),
+      PrefixSum.Max(col("v"), "m"))
+    val w = Window.orderBy(order: _*).rowsBetween(Window.unboundedPreceding, -1)
+    val naive = df.filter(keys.map(col(_).isNotNull).reduce(_ && _))
+      .withColumn("s", coalesce(sum(col("w")).over(w), lit(0L)))
+      .withColumn("c", coalesce(count(lit(1)).over(w), lit(0L)))
+      .withColumn("m", max(col("v")).over(w))
+    def rows(d: org.apache.spark.sql.DataFrame) = d.collect().map(_.toString).sorted.toSeq
+    (rows(got), rows(naive))
+  }
+
+  private val prefixSumConfs = for {
+    aqe <- Seq("true", "false")
+    parts <- Seq("1", "3", "64")
+  } yield Seq("spark.sql.adaptive.enabled" -> aqe, "spark.sql.shuffle.partitions" -> parts)
+
+  test("PrefixSum equals the naive offset window: multi-column and descending orders, " +
+      "null weights, AQE on and off") {
+    // (k, id) is unique per row; k repeats, so the multi-column orders
+    // need their second key; w and v are null about one time in five
+    val row = Gen.zip(Gen.chooseNum(-3L, 3L), Gen.option(Gen.chooseNum(-50, 50)),
+      Gen.option(Gen.chooseNum(-1000L, 1000L)))
+    val orders = Seq(Seq(col("id").asc), Seq(col("id").desc),
+      Seq(col("k").asc, col("id").asc), Seq(col("k").desc, col("id").asc),
+      Seq(col("k").asc_nulls_last, col("id").desc))
+    samples(Gen.listOfN(40, row), 3).foreach { rs =>
+      val df = rs.zipWithIndex.map { case ((k, w, v), i) => (i.toLong, k, w, v) }
+        .toDF("id", "k", "w", "v")
+      for (conf <- prefixSumConfs; order <- orders) TestSpark.withConf(conf: _*) {
+        val (got, naive) = prefixSumVsWindow(df, order, Seq("id", "k"))
+        assert(got == naive, s"order $order under $conf")
+      }
+    }
+  }
+
+  test("PrefixSum edge shapes: empty input, one row, more partitions than rows") {
+    val shapes = Seq(Seq.empty[(Long, Long, Option[Int], Option[Long])],
+      Seq((7L, 1L, Some(5), Some(3L))), Seq((1L, 1L, None, None), (2L, 1L, Some(2), None)))
+    for (rs <- shapes; conf <- prefixSumConfs) TestSpark.withConf(conf: _*) {
+      val df = rs.toDF("id", "k", "w", "v")
+      val (got, naive) = prefixSumVsWindow(df, Seq(col("id")), Seq("id"))
+      assert(got == naive, s"$rs under $conf")
+      assert(got.length == rs.length)
+    }
+  }
+
+  test("PrefixSum drops the rows whose order key is null, in every column of the order") {
+    val df = Seq[(Option[Long], Option[Long], Int)]((Some(1L), Some(1L), 10),
+        (None, Some(2L), 20), (Some(3L), None, 30), (Some(4L), Some(4L), 40))
+      .toDF("a", "b", "w")
+    val got = graft.operators.PrefixSum(df, Seq(col("a"), col("b")),
+        graft.operators.PrefixSum.Sum(col("w"), "s"))
+      .select("a", "s").as[(Long, Long)].collect().toSeq
+    assert(got.sorted == Seq(1L -> 0L, 4L -> 10L))
+    // a total over the output reads no running column: the scan is pruned
+    // to its null-key filter
+    val total = graft.operators.PrefixSum(df, Seq(col("a"), col("b")),
+      graft.operators.PrefixSum.Sum(col("w"), "s")).agg(sum(col("w")))
+    assert(total.head().getLong(0) == 50L)
+    assert(total.queryExecution.optimizedPlan.collect {
+      case n: graft.operators.PrefixSumNode => n }.isEmpty)
   }
 
   test("madOutliers: flags invariant under group translation (median/MAD equivariance)") {

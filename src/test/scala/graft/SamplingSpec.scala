@@ -31,8 +31,7 @@ class SamplingSpec extends AnyFunSuite {
     val docs = Tables.documents(spark, TestSpark.sf0001)
       .select(col("doc_id"), size(split(col("text"), " ")).cast("long").as("w"))
     val a = Sampling.systematicPps(docs, "doc_id", "w", n = 137L)
-    val b = Sampling.systematicPps(docs.repartition(13), "doc_id", "w",
-      n = 137L, nBuckets = 7)
+    val b = Sampling.systematicPps(docs.repartition(13), "doc_id", "w", n = 137L)
     assert(a.agg(sum("copies")).head().getLong(0) == 137L)
     // partitioning and bucketing never leak into the result
     assert(a.orderBy("doc_id").collect().toSeq ==

@@ -1,5 +1,11 @@
 package graft
 
+import graft.operators.PrefixSumExec
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.window.WindowExec
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Plan-level guards against the corpus-cardinality broadcast class of bug
@@ -21,12 +27,36 @@ class ScaleGuardSpec extends AnyFunSuite {
     df.queryExecution.executedPlan.toString
   }
 
+  /** Every node of `p`, AQE's current plan and query stages included. */
+  private def planNodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+    case a: AdaptiveSparkPlanExec => planNodes(a.executedPlan)
+    case s: QueryStageExec => planNodes(s.plan)
+    case r: ReusedExchangeExec => planNodes(r.child)
+    case _ => p.children.flatMap(planNodes)
+  })
+
+  /** The prefix-sum shape: a PrefixSum node over a range exchange, and no
+    * unpartitioned Window anywhere — the input never funnels through one
+    * partition. */
+  private def assertPrefixSumShape(q: String): Unit = {
+    val df = SparkEntry.queries(q)(spark, TestSpark.sf0001)
+    df.collect()
+    val nodes = planNodes(df.queryExecution.executedPlan)
+    val scans = nodes.collect { case p: PrefixSumExec => p }
+    assert(scans.nonEmpty && scans.forall(p =>
+      p.child.outputPartitioning.isInstanceOf[RangePartitioning] && planNodes(p.child).exists {
+        case e: ShuffleExchangeExec => e.outputPartitioning.isInstanceOf[RangePartitioning]
+        case _ => false
+      }), s"$q: expected PrefixSum over a range-partitioned exchange:\n${df.queryExecution.executedPlan}")
+    val globalWindows = nodes.collect { case w: WindowExec if w.partitionSpec.isEmpty => w }
+    assert(globalWindows.isEmpty,
+      s"$q: unpartitioned Window over the input:\n${df.queryExecution.executedPlan}")
+  }
+
   test("q100_pipeline_e2e: keep-first dedup is a window, not a corpus semi-join") {
-    // packOffsets legitimately broadcasts its O(buckets) offset table, so
-    // "no BroadcastExchange" is too strict here; the regression being
-    // guarded is the corpus-cardinality keepers table coming back as a
-    // (broadcast) LEFT SEMI join on doc_id — assert the join shape is gone
-    // and the md5 keep-first window took its place.
+    // the regression being guarded is the corpus-cardinality keepers table
+    // coming back as a (broadcast) LEFT SEMI join on doc_id — assert the
+    // join shape is gone and the md5 keep-first window took its place.
     val plan = executedPlan("q100_pipeline_e2e")
     assert(!plan.contains("LeftSemi"),
       s"q100 re-grew the keepers semi-join (corpus-cardinality build side at scale):\n$plan")
@@ -55,17 +85,36 @@ class ScaleGuardSpec extends AnyFunSuite {
       "broadcast side should be the aggregated stats, not the fact stream")
   }
 
+  // The scale cliff being guarded: row_number() / sum() over (ORDER BY …)
+  // with no partition — every row through ONE partition. The global rank
+  // (q193), the PPS cumulative-weight line (q256) and the Pareto running
+  // max (q281) run on PrefixSum: the range exchange buckets the rows by
+  // value range, and no window runs without a partition key.
   test("q193_balanced_shards: global rank is bucketed, not a corpus-wide window") {
-    // the scale cliff being guarded: row_number() over (ORDER BY w) with no
-    // partition — every row through ONE partition. The two-phase form keeps
-    // a __bucket partition key on the corpus-side window; the only
-    // unpartitioned window runs over the O(buckets) offset table, whose
-    // broadcast back is the plan's BroadcastExchange.
-    val plan = executedPlan("q193_balanced_shards")
-    assert(plan.contains("__bucket"),
-      s"expected the value-range __bucket partition key in the rank window:\n$plan")
-    assert(plan.contains("BroadcastExchange"),
-      "expected the O(buckets) offset table broadcast back")
+    assertPrefixSumShape("q193_balanced_shards")
+  }
+
+  test("q256_systematic_pps: prefix sum is bucketed, not a corpus-wide window") {
+    assertPrefixSumShape("q256_systematic_pps")
+  }
+
+  test("q281_pareto_frontier: running max is bucketed, not a corpus-wide window") {
+    assertPrefixSumShape("q281_pareto_frontier")
+  }
+
+  test("q100_pipeline_e2e: reads documents once, runs no build job and at most 6 jobs") {
+    // sequence packing is one PrefixSum: the max-id / bucket-totals
+    // diamond re-derived the NFC → profile → dedup → quota chain per
+    // branch (2 documents scans after AQE, 11 jobs)
+    val q = "q100_pipeline_e2e"
+    var df: org.apache.spark.sql.DataFrame = null
+    assert(TestSpark.jobsDuring { df = SparkEntry.queries(q)(spark, TestSpark.sf0001) } == 0,
+      s"$q ran a job while its DataFrame was built")
+    val total = TestSpark.jobsDuring(df.collect())
+    assert(total <= 6, s"$q ran $total jobs")
+    val scans = planNodes(df.queryExecution.executedPlan)
+      .count(_.isInstanceOf[org.apache.spark.sql.execution.FileSourceScanExec])
+    assert(scans == 1, s"$q scans documents $scans times:\n${df.queryExecution.executedPlan}")
   }
 
   test("q261_analyze_columns: the stack unpivot profiles all columns in ONE scan") {
@@ -77,26 +126,6 @@ class ScaleGuardSpec extends AnyFunSuite {
       .split("== Initial Plan ==").head
     val scans = "Scan parquet".r.findAllIn(plan).length
     assert(scans == 1, s"expected exactly one parquet scan, saw $scans:\n$plan")
-  }
-
-  test("q256_systematic_pps: prefix sum is bucketed, not a corpus-wide window") {
-    // the PPS cumulative-weight line must come from GlobalRank's
-    // two-phase decomposition: per-bucket windows keyed by __bkt, with
-    // the offset table broadcast back — a corpus-wide ordered window
-    // here would single-partition the whole doc table at 100 TB
-    val plan = executedPlan("q256_systematic_pps")
-    assert(plan.contains("__bkt"),
-      s"expected the bucketed prefix-sum partition key:\n$plan")
-    assert(plan.contains("BroadcastExchange"),
-      "expected the O(buckets) offset broadcast")
-  }
-
-  test("q281_pareto_frontier: running max is bucketed, not a corpus-wide window") {
-    val plan = executedPlan("q281_pareto_frontier")
-    assert(plan.contains("__bkt"),
-      s"expected the two-phase prefix-MAX bucket key:\n$plan")
-    assert(plan.contains("BroadcastExchange"),
-      "expected the O(buckets) offset broadcast")
   }
 
   test("q239_merkle_audit: two keyed digest aggs, no broadcast, no corpus sort") {
@@ -253,6 +282,23 @@ class ScaleGuardSpec extends AnyFunSuite {
     // one call on each side of the self-join, none in an inferred filter
     val sites = kernelSites(df, "nearest_centroid_l2")
     assert(sites == Seq("Project", "Project"), s"nearest_centroid_l2 call sites $sites:\n" +
+      df.queryExecution.optimizedPlan)
+  }
+
+  test("q108_semdedup: the row norm runs once per row, and double vectors are not re-cast") {
+    // a nullable norm let Spark infer isnotnull(__n) from the cosine join
+    // condition and push it below the projection (a third norm_d call);
+    // a transform(x -> cast(x as double)) over the already-double vectors
+    // optimized to transform(x -> x), a copy of every vector
+    import org.apache.spark.sql.catalyst.expressions.{ArrayTransform, LambdaFunction, NamedLambdaVariable}
+    val df = SparkEntry.queries("q108_semdedup")(spark, TestSpark.sf0001)
+    val norms = kernelSites(df, "norm_d")
+    assert(norms == Seq("Project", "Project"), s"norm_d call sites $norms:\n" +
+      df.queryExecution.optimizedPlan)
+    val identities = df.queryExecution.optimizedPlan.flatMap(_.expressions.flatMap(_.collect {
+      case t @ ArrayTransform(_, LambdaFunction(_: NamedLambdaVariable, _, _)) => t
+    }))
+    assert(identities.isEmpty, s"identity transforms $identities:\n" +
       df.queryExecution.optimizedPlan)
   }
 

@@ -18,4 +18,15 @@ object TestSpark {
 
   /** Spark jobs launched while `f` runs. */
   def jobsDuring(f: => Any): Int = QueryMetrics.measure(spark)(f).jobs
+
+  /** Runs `body` with the session confs `kvs` set, restoring them after. */
+  def withConf[A](kvs: (String, String)*)(body: => A): A = {
+    val old = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally old.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 }

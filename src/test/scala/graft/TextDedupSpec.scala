@@ -314,7 +314,7 @@ class TextDedupSpec extends AnyFunSuite {
       (22L, "l m"), (40L, "n"), (41L, "o p q"), (99L, "r s t u"))
       .toDF("doc_id", "text")
     val got = SequencePack.packOffsets(docs, "doc_id",
-        Text.tokenCount(col("text")), budget = 4L, nBuckets = 4)
+        Text.tokenCount(col("text")), budget = 4L)
       .orderBy("doc_id")
       .select("doc_id", "n_tokens", "start_offset", "seq_id")
       .as[(Long, Long, Long, Long)].collect().toSeq
@@ -386,7 +386,7 @@ class TextDedupSpec extends AnyFunSuite {
       .toDF("doc_id", "text")
     val B = 4L
     val rows = SequencePack.packSlices(docs, "doc_id",
-        Text.tokenCount(col("text")), budget = B, nBuckets = 4)
+        Text.tokenCount(col("text")), budget = B)
       .select("seq_id", "doc_id", "slice_start", "slice_len")
       .as[(Long, Long, Long, Long)].collect().toSeq
     val total = 3 + 2 + 1 + 5 + 2 + 1 + 3 + 4 // 21 tokens
@@ -416,7 +416,7 @@ class TextDedupSpec extends AnyFunSuite {
     assert(rows.count(_._2 == 21L) >= 2)
     // slice count = docs + boundary crossings
     val offsets = SequencePack.packOffsets(docs, "doc_id",
-        Text.tokenCount(col("text")), budget = B, nBuckets = 4)
+        Text.tokenCount(col("text")), budget = B)
       .select("start_offset", "n_tokens").as[(Long, Long)].collect()
     val crossings = offsets.map { case (o, n) => (o + n - 1) / B - o / B }.sum
     assert(rows.size == docs.count() + crossings)

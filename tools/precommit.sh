@@ -56,6 +56,20 @@ if [[ -n "$folds" ]]; then
   exit 1
 fi
 
+# One prefix sum: an exclusive running aggregate over a global order goes
+# through graft.operators.PrefixSum, never an unpartitioned offset window
+# (every row through one partition — also the offset pass of a bucketed
+# two-phase copy). An offset window passes only with a partitionBy on its
+# own line or the two lines above.
+offsets=$(find src/main -name '*.scala' ! -path '*/graft/operators/PrefixSum.scala' -print0 \
+  | xargs -0 awk 'FNR == 1 { p = -10 } /partitionBy/ { p = FNR }
+      /rowsBetween\(Window\.unboundedPreceding, -1\)/ && FNR - p > 2 { print FILENAME ":" FNR ": " $0 }')
+if [[ -n "$offsets" ]]; then
+  echo "precommit: unpartitioned offset window (use graft.operators.PrefixSum):" >&2
+  echo "$offsets" >&2
+  exit 1
+fi
+
 # Every `runMain graft.…` the docs name must be an object in src/main.
 missing=0
 for fq in $(grep -oh "runMain graft\.[A-Za-z0-9_.]*" README.md .claude/skills/verify/SKILL.md \
